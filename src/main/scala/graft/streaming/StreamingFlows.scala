@@ -47,7 +47,11 @@ object StreamingFlows {
     * late right could displace the retained latest-finalized right. With
     * the explicit drop, lateness behaves exactly like Spark's built-in
     * event-time operators: late rows are excluded, on-time results are
-    * exact.
+    * exact. The watermark is the latest event time seen across BOTH inputs
+    * in earlier micro-batches, minus `delay`, so a left that arrives a
+    * micro-batch after a right more than `delay` newer is late and is
+    * dropped: which rows count as late depends on how the two inputs fall
+    * into micro-batches.
     *
     * Lateness contract AT the boundary: an element whose event time
     * equals the current watermark IS dropped — that bound is the

@@ -211,15 +211,19 @@ class JoinsSpec extends SparkSpec {
       _._2, _._1, _._3, _._2,
       delay = "10 minutes",
       (l, r) => (l._1, r.map(_._3).getOrElse(-1.0)))
+    // batch 1: rights at 09:30 (v=1.0) and 11:30 (v=2.0); lefts at 10:00,
+    // 12:00, 09:00 — nothing final yet (watermark still at epoch).
+    // Queued BEFORE start(): the first micro-batch reads every source's
+    // latest offset, so all five rows share it. Added to a running query,
+    // the trigger could take the rights alone, move the watermark to 11:20
+    // and make lefts 1 and 3 late (dropped, as the operator documents).
+    rIn.addData((10L, ts("2024-01-01 09:30:00"), 1.0), (10L, ts("2024-01-01 11:30:00"), 2.0))
+    lIn.addData((1L, 10L, ts("2024-01-01 10:00:00")),
+                (2L, 10L, ts("2024-01-01 12:00:00")),
+                (3L, 10L, ts("2024-01-01 09:00:00")))
     val q = joined.writeStream.format("memory").queryName("asof_out")
       .outputMode("append").start()
     try {
-      // batch 1: rights at 09:30 (v=1.0) and 11:30 (v=2.0); lefts at 10:00,
-      // 12:00, 09:00 — nothing final yet (watermark still at epoch)
-      rIn.addData((10L, ts("2024-01-01 09:30:00"), 1.0), (10L, ts("2024-01-01 11:30:00"), 2.0))
-      lIn.addData((1L, 10L, ts("2024-01-01 10:00:00")),
-                  (2L, 10L, ts("2024-01-01 12:00:00")),
-                  (3L, 10L, ts("2024-01-01 09:00:00")))
       q.processAllAvailable()
       // batch 2: advance the watermark past every left (13:00 - 10min)
       rIn.addData((99L, ts("2024-01-01 13:00:00"), 0.0))
