@@ -152,11 +152,9 @@ object AnalyticsGates {
       m = PqM, k = PqK, iters = PqIters)
     val queries = rotTrain.orderBy(col("vec_id")).limit(PqQ)
     val codes = PQ.encode(rotLazy, col("vec_id"), col("embedding"), cb)
-    // adcTopK collects the query vectors at build time, so rotTrain can
-    // release its blocks before the serving plan is returned
-    val out = PQ.adcTopK(codes, queries, col("vec_id"), col("embedding"), cb, topK = PqTopK)
-    rotTrain.unpersist()
-    out
+    // adcTopK collects the query vectors at build time, so the serving
+    // plan does not read rotTrain and the gate's scope frees its blocks
+    PQ.adcTopK(codes, queries, col("vec_id"), col("embedding"), cb, topK = PqTopK)
   }
 
   private[graft] val BDeleteMod = 89
@@ -348,7 +346,7 @@ object AnalyticsGates {
     val dir = layoutScratchDir("q226", d)
     Storage.writeQuantileServeLayout(finalBase, "grp", "value", QvScale,
       grpBuckets = 64, bits = 16, files = 32, path = s"$dir/base")
-    finalBase.unpersist()
+    graft.Materialize.release(finalBase)
     Storage.quantilesFromCellsLayout(s, s"$dir/base", maintained,
         "grp", "value", QvScale, QvQs, grpBuckets = 64)
       .select(col("g").as("o_custkey"), col("q"), col("value"))
@@ -448,7 +446,7 @@ object AnalyticsGates {
     val dir = layoutScratchDir("q227", d)
     Storage.writeQuantileServeLayout(finalBase, "grp", "value", QvScale,
       grpBuckets = 8, bits = 16, files = 32, path = s"$dir/base")
-    finalBase.unpersist()
+    graft.Materialize.release(finalBase)
     Storage.weightedQuantilesFromCellsLayout(s, s"$dir/base", maintained,
         "grp", "value", "w", QvScale, WqvQs, grpBuckets = 8)
       .select(col("g").as("o_orderpriority"), col("q"), col("value"))

@@ -152,19 +152,20 @@ object Bench {
     // on an idle box historically; 67/199 on the contended one), so a
     // noisy run can never silently pass for a regression or a win.
     val unreliable = timed.nonEmpty && unstable.size * 5 > timed.size
+    // FILE artifact (round-16 verdict item 2): the ~6 KB per-query detail
+    // line overflows a bounded stdout-tail capture at 199 queries — the
+    // full record also goes to a file, by default one per (cpus, sf) under
+    // target/bench/ so a run never rewrites a tracked file.
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString.stripPrefix("sf")
+    val detailPath = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
+      s"target/bench/detail_c${cpus}_sf$sfName.json"))
     val medLine = s"""{"detail":"per-query median of $reps reps","queries":${jsonMap(med)},"failed":$failedJson,"unstable":$unstableJson,"unstable_failed":$unstableFailedJson}"""
-    val totalLine = s"""{"metric":"total","value":${r4(total)},"unit":"sec","reps":$reps,"benched":${timed.size},"failed_count":${failures.size},"unstable_count":${unstable.size},"unstable_failed_count":${unstableFailed.size},"record_unreliable":$unreliable,"contended":$contended,"pre_load":${r4(preLoad)},"sf":"$sfDir"}"""
+    val totalLine = s"""{"metric":"total","value":${r4(total)},"unit":"sec","reps":$reps,"benched":${timed.size},"failed_count":${failures.size},"unstable_count":${unstable.size},"unstable_failed_count":${unstableFailed.size},"record_unreliable":$unreliable,"contended":$contended,"pre_load":${r4(preLoad)},"sf":"$sfDir","detail_file":"$detailPath"}"""
     println(medLine)
     println(totalLine)
-    // FILE artifact (round-16 verdict item 2): the ~6 KB per-query detail
-    // line overflows the driver's bounded stdout-tail capture at 199
-    // queries, which voided round 16's per-query comparison entirely —
-    // persist the full record next to the repo so medians survive any
-    // tail truncation. stdout contract above is unchanged.
     try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json"))
-      java.nio.file.Files.write(out,
+      Option(detailPath.toAbsolutePath.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(detailPath,
         (s"""{"detail":"per-query min of $reps reps","queries_min":${jsonMap(mins)}}""" +
           "\n" + medLine + "\n" + totalLine + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -312,7 +312,7 @@ object ExtensionQueries {
     val resTrain = graft.Materialize(res)
     val cb = graft.similarity.IVFPQ.trainCodebooks(
       resTrain, AnalyticsGates.PqM, AnalyticsGates.PqK, AnalyticsGates.PqIters)
-    resTrain.unpersist()
+    graft.Materialize.release(resTrain)
     val codes = graft.similarity.IVFPQ.encode(res, cb)
     graft.similarity.IVFPQ.adcTopK(
       codes, emb.where(col("vec_id") < 5), col("vec_id"), col("embedding"),

@@ -319,7 +319,6 @@ object GraphGates {
     // silent hash mismatch
     val nNodes = e.select(col("u")).unionAll(e.select(col("v"))).distinct().count()
     val nForest = forest.count()
-    e.unpersist()
     require(nForest == nNodes - 1,
       s"q216 oracle assumes a CONNECTED nation graph (single-seed Prim); engine forest " +
         s"has $nForest edges over $nNodes nodes — regenerate the oracle as a per-component " +
@@ -339,13 +338,13 @@ object GraphGates {
     // pay the lineitem-window edge derivation ONCE: the threshold
     // quantile and the clustering both consume it (construction is eager
     // on both — collect inside exactQuantiles, driver Kruskal/CC inside
-    // singleLinkageClusters — so the block releases before returning)
+    // singleLinkageClusters — so the gate's scope frees the block when
+    // the gate returns)
     val e = graft.Materialize(nationEdges(s, d))
     val t = graft.curation.Quantiles.exactQuantiles(e, lit(0L), col("w"), Seq(0.5))
       .head().getDouble(2).toLong
     val out = Graphs.singleLinkageClusters(e, col("u"), col("v"), col("w"), t)
       .select(col("node").as("nationkey"), col("cluster"))
-    e.unpersist()
     out
   }
 

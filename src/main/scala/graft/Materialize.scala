@@ -1,13 +1,20 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Eager mid-plan materialization with a durability switch.
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+/** Eager mid-plan materialization with a durability switch, and the one
+  * owner of the intermediate state it creates.
   *
   * The iterative / multi-reference operators (the connected-component label
-  * rounds in [[graft.dedup.Dedup.nearDupClusters]], the bucket-count offset
-  * relations in [[graft.curation.Assembly]] and [[graft.curation.Corpus]])
-  * must cut lineage and materialize an intermediate result: re-executing the
+  * rounds in [[graft.dedup.Dedup.nearDupClusters]], the graph loops in
+  * [[graft.graphs.Graphs]], the bucket-count offset relations in
+  * [[graft.curation.Assembly]] and [[graft.curation.Corpus]]) must cut
+  * lineage and materialize an intermediate result: re-executing the
   * upstream plan per iteration (or once per join side) is exactly the scale
   * bug those operators exist to avoid. HOW they materialize is a durability
   * decision this switch centralizes:
@@ -26,10 +33,30 @@ import org.apache.spark.sql.Dataset
   *
   * Cluster deployments should set
   * `spark.conf.set("graft.checkpointDir", "hdfs://…/graft-ckpt")` before
-  * running the iterative operators. Checkpoint files accumulate per run:
-  * enable `spark.cleaner.referenceTracking.cleanCheckpoints=true` or clean
-  * the directory between runs. With the conf unset nothing changes — the
-  * local[*] test/bench profile keeps the zero-IO localCheckpoint path.
+  * running the iterative operators. With the conf unset nothing changes —
+  * the local[*] test/bench profile keeps the zero-IO localCheckpoint path.
+  *
+  * Releasing. `Dataset.unpersist()` frees nothing here: checkpoint blocks
+  * are not `CacheManager` entries. Intermediate state is owned by a
+  * [[scope]] instead. Every [[apply]] and [[persist]] call registers what
+  * it creates with the innermost scope open on the calling thread, and the
+  * scope frees it when its body exits, normally or by an exception:
+  *
+  *  - a local checkpoint's blocks are removed (`unpersist(blocking =
+  *    false)` on the RDD behind its `LogicalRDD`);
+  *  - a reliable checkpoint's `rdd-NN` directory under `graft.checkpointDir`
+  *    is deleted;
+  *  - a [[persist]]ed Dataset is unpersisted.
+  *
+  * What the body's returned value still reads — every Dataset in it,
+  * tuples included, through its logical plan and RDD lineage — is not
+  * freed: it passes to the enclosing scope, or, with no scope open, stays
+  * resident until Spark's context cleaner drops it after a GC (the
+  * behaviour outside any scope). [[release]] frees superseded loop state
+  * of the current scope at once. Scopes open at
+  * operator boundaries: each looping public operator, each gate of the
+  * [[SparkEntry.queries]] registry, and each `foreachBatch` body of the
+  * `graft.streaming` maintainers.
   *
   * ONE directory per SparkContext: `graft.checkpointDir` is read from the
   * session conf but `SparkContext.setCheckpointDir` is context-GLOBAL, so
@@ -72,7 +99,7 @@ private[graft] object Materialize {
 
   def apply[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
+    val out = spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         lockFor(sc).synchronized {
@@ -91,7 +118,129 @@ private[graft] object Materialize {
         ds.checkpoint()
       case None => ds.localCheckpoint()
     }
+    checkpointRdd(out).foreach(rdd => own(Checkpointed(rdd)))
+    out
   }
+
+  /** `ds.persist()`, owned by the innermost open [[scope]]: the scope
+    * unpersists it on exit unless its result still reads it.
+    */
+  def persist[T](ds: Dataset[T]): Dataset[T] = {
+    val out = ds.persist()
+    own(Persisted(out))
+    out
+  }
+
+  /** Runs `body` as the owner of every [[apply]] / [[persist]] it calls
+    * on this thread (nested scopes included), then frees what its result
+    * does not read. A thrown exception frees everything; a non-local
+    * `return` out of `body` counts as a result.
+    */
+  def scope[T](body: => T): T = {
+    val s = new Scope(current.get)
+    current.set(s)
+    var result: Option[Any] = None
+    try {
+      val r = body
+      result = Some(r)
+      r
+    } catch {
+      case nlr: scala.runtime.NonLocalReturnControl[_] =>
+        result = Some(nlr.value)
+        throw nlr
+    } finally {
+      current.set(s.parent)
+      close(s, result)
+    }
+  }
+
+  /** Frees `ds` now, if it is a [[apply]] or [[persist]] result owned by
+    * the innermost open scope: superseded loop state whose successor is
+    * already materialized. Anything else — a projection over such a
+    * result, state owned by an outer scope or by no scope — is left alone.
+    */
+  def release(ds: Dataset[_]): Unit = {
+    val s = current.get
+    if (s != null) {
+      val rddId = checkpointRdd(ds).map(_.id)
+      val mine = s.held.filter {
+        case Checkpointed(rdd) => rddId.contains(rdd.id)
+        case Persisted(p) => p eq ds
+      }
+      s.held --= mine
+      mine.foreach(free)
+    }
+  }
+
+  private sealed trait Held
+  private final case class Checkpointed(rdd: RDD[_]) extends Held
+  private final case class Persisted(ds: Dataset[_]) extends Held
+
+  private final class Scope(val parent: Scope) {
+    val held = mutable.ArrayBuffer.empty[Held]
+  }
+  private val current = new ThreadLocal[Scope]
+
+  private def own(h: Held): Unit = {
+    val s = current.get
+    if (s != null) s.held += h
+  }
+
+  /** The RDD a checkpointed Dataset reads its blocks from. */
+  private def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
+    ds.queryExecution.logical match {
+      case r: LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+
+  private def close(s: Scope, result: Option[Any]): Unit = if (s.held.nonEmpty) {
+    val (kept, dead) =
+      try s.held.partition(readBy(result.toSeq.flatMap(datasetsIn)))
+      catch { case NonFatal(_) => (s.held, mutable.ArrayBuffer.empty[Held]) } // unsure: free nothing
+    dead.foreach(free)
+    if (s.parent != null) s.parent.held ++= kept
+  }
+
+  private def datasetsIn(v: Any): Seq[Dataset[_]] = v match {
+    case d: Dataset[_] => Seq(d)
+    case p: Product => p.productIterator.flatMap(datasetsIn).toSeq
+    case _ => Nil
+  }
+
+  /** Whether the plans of `results` still read a held entry: a checkpoint
+    * whose RDD lies in the lineage of an RDD they scan, or a persisted
+    * Dataset whose plan is a subtree of theirs (where the cache manager
+    * substitutes its cache).
+    */
+  private def readBy(results: Seq[Dataset[_]]): Held => Boolean = {
+    if (results.isEmpty) return _ => false
+    val plans = results.map(_.queryExecution.analyzed)
+    val rdds = mutable.Set.empty[Int]
+    val pending = mutable.Stack[RDD[_]](plans.flatMap(_.collectWithSubqueries {
+      case r: LogicalRDD => r.rdd
+    }): _*)
+    while (pending.nonEmpty) {
+      val rdd = pending.pop()
+      if (rdds.add(rdd.id)) rdd.dependencies.foreach(d => pending.push(d.rdd))
+    }
+    {
+      case Checkpointed(rdd) => rdds(rdd.id)
+      case Persisted(ds) =>
+        val cached = ds.queryExecution.analyzed
+        plans.exists(_.find(_.sameResult(cached)).isDefined)
+    }
+  }
+
+  private def free(h: Held): Unit =
+    try h match {
+      case Checkpointed(rdd) =>
+        rdd.unpersist(blocking = false)
+        rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(rdd.context.hadoopConfiguration).delete(path, true)
+        }
+      case Persisted(ds) => ds.unpersist(blocking = false)
+    } catch { case NonFatal(_) => () } // best effort: a stopped context has nothing left to free
 
   /** Forget the directory applied on `spark`'s context, so the next
     * materialization applies the session's current conf value. For

@@ -233,9 +233,14 @@ object SparkEntry {
 
   // --- registry ---------------------------------------------------------
 
+  /** Every gate, each run in its own [[Materialize.scope]]: a gate returns
+    * holding only the intermediate state its result reads.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ ExtensionQueries.queries ++ StreamingGates.queries ++
-      GraphGates.queries ++ AnalyticsGates.queries
+    (coreQueries ++ ExtensionQueries.queries ++ StreamingGates.queries ++
+      GraphGates.queries ++ AnalyticsGates.queries).map { case (name, gate) =>
+      name -> ((s: SparkSession, d: String) => Materialize.scope(gate(s, d)))
+    }
 
   private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_map" -> (q01Map _),

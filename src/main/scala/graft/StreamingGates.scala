@@ -903,7 +903,6 @@ object StreamingGates {
       in.addData(b2.toIndexedSeq)
       q.processAllAvailable()
     } finally q.stop()
-    codes.unpersist()
     s.table(sink).select(col("q_id"), col("n_id"), col("rank"), col("dist"))
   }
 
@@ -1668,7 +1667,7 @@ object StreamingGates {
         greatest(col("pa"), col("pb")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct())
     val rows = edges.as[(Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q236edges")
     val coreTable = sinkName("q236core")
     Seq.empty[(Long, Long)].toDF("u", "v")
@@ -1706,7 +1705,7 @@ object StreamingGates {
         greatest(col("pa"), col("pb")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct())
     val rows = edges.as[(Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q240edges")
     val countTable = sinkName("q240counts")
     Seq.empty[(Long, Long)].toDF("u", "v")
@@ -1752,7 +1751,7 @@ object StreamingGates {
           greatest(col("src"), col("dst")).cast("long").as("v"))
         .where(col("u") =!= col("v")).distinct())
     val rows = edges.as[(Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q244edges")
     val trussTable = sinkName("q244truss")
     Seq.empty[(Long, Long)].toDF("u", "v")
@@ -1796,7 +1795,7 @@ object StreamingGates {
     val edges = graft.Materialize(GraphGates.weightedTransitions(s, d, GraphGates.KhopQty))
     val rows = edges.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
       .as[(Long, Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q243edges")
     val distTable = sinkName("q243dist")
     Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
@@ -1839,7 +1838,7 @@ object StreamingGates {
     val edges = graft.Materialize(GraphGates.weightedTransitions(s, d, GraphGates.KhopQty))
     val rows = edges.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
       .as[(Long, Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q245edges")
     val distTable = sinkName("q245dist")
     Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
@@ -1892,7 +1891,7 @@ object StreamingGates {
         greatest(col("pa"), col("pb")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct())
     val rows = edges.as[(Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q242edges")
     val viewTable = sinkName("q242view")
     Seq.empty[(Long, Long)].toDF("u", "v")
@@ -1937,7 +1936,7 @@ object StreamingGates {
         greatest(col("pa"), col("pb")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct())
     val rows = edges.as[(Long, Long)].collect()
-    edges.unpersist()
+    graft.Materialize.release(edges)
     val edgeTable = sinkName("q239edges")
     val coreTable = sinkName("q239core")
     Seq.empty[(Long, Long)].toDF("u", "v")
@@ -2029,7 +2028,7 @@ object StreamingGates {
       .head().getDouble(2).toLong
     val edges = e.select(col("u").cast("long"), col("v").cast("long"),
       col("w").cast("long")).as[(Long, Long, Long)].collect()
-    e.unpersist()
+    graft.Materialize.release(e)
     val forestTable = sinkName("q233forest")
     Seq.empty[(Long, Long, Long)].toDF("u", "v", "w")
       .write.mode("overwrite").format("parquet").saveAsTable(forestTable)
@@ -2066,7 +2065,7 @@ object StreamingGates {
     val e = graft.Materialize(GraphGates.nationEdges(s, d))
     val edges = e.select(col("u").cast("long"), col("v").cast("long"),
       col("w").cast("long")).as[(Long, Long, Long)].collect()
-    e.unpersist()
+    graft.Materialize.release(e)
     val edgeTable = sinkName(s"${tag}edges")
     val forestTable = sinkName(s"${tag}forest")
     val labelsTable = sinkName(s"${tag}labels")
@@ -2131,7 +2130,7 @@ object StreamingGates {
     val e = graft.Materialize(GraphGates.nationEdges(s, d))
     val t = graft.curation.Quantiles.exactQuantiles(e, lit(0L), col("w"), Seq(0.5))
       .head().getDouble(2).toLong
-    e.unpersist()
+    graft.Materialize.release(e)
     val forest = s.table(runMsfCdcCached(s, d))
     val nodes = forest.select(col("u").as("node"))
       .unionByName(forest.select(col("v").as("node"))).distinct()

@@ -810,7 +810,7 @@ object Dedup {
       val cpKey = "spark.sql.constraintPropagation.enabled"
       val cpPrev = session.conf.getOption(cpKey)
       session.conf.set(cpKey, "false")
-      try nearDupClustersImpl(vertices, id, pairs, maxIter, localPairs)
+      try graft.Materialize.scope(nearDupClustersImpl(vertices, id, pairs, maxIter, localPairs))
       finally cpPrev match {
         case Some(v) => session.conf.set(cpKey, v)
         case None    => session.conf.unset(cpKey)
@@ -918,7 +918,6 @@ object Dedup {
         vertices.sparkSession,
         inUniverse.select(col("doc_a"), col("doc_b")).collect(),
         inUniverse.schema("doc_a").dataType, ord.get)
-      inUniverse.unpersist()
       return labels.unionByName(
         vertexIds.join(labels, Seq("doc_id"), "left_anti")
           .select(col("doc_id"), col("doc_id").as("cluster_id")))
@@ -926,7 +925,7 @@ object Dedup {
     val edges = graft.Materialize(
       inUniverse.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(inUniverse.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    inUniverse.unpersist()
+    graft.Materialize.release(inUniverse)
     // The loop runs over EDGE-TOUCHED vertices only: a vertex in no pair
     // has no incoming propagation, so its label is provably self forever —
     // iterating it just reshuffles it maxIter times. Touched vertices are
@@ -994,7 +993,7 @@ object Dedup {
       if (dbg) println(f"cc iter $i: mat ${(tMat1 - tMat0) / 1e9}%.3f s, " +
         f"obs ${(System.nanoTime() - tMat1) / 1e9}%.3f s, " +
         f"total ${(System.nanoTime() - tIter0) / 1e9}%.3f s, changed=$changed")
-      if (i > 0) labels.unpersist() // drop the superseded checkpoint's blocks
+      graft.Materialize.release(labels) // drop the superseded checkpoint's blocks
       labels = updated
       i += 1
     }
@@ -1006,7 +1005,6 @@ object Dedup {
     val out = labels.unionByName(
       vertexIds.join(labels, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("cluster_id")))
-    edges.unpersist()
     out
   }
 

@@ -52,7 +52,7 @@ object Graphs {
     * ONE bounded scalar (the dangling sum) to the driver. Rank state is
     * re-materialized per round to cut lineage, exactly like the CC loop in
     * [[graft.dedup.Dedup.nearDupClusters]]; superseded round blocks are
-    * unpersisted. Nothing driver-side ever holds O(V).
+    * released. Nothing driver-side ever holds O(V).
     *
     * @param nodes relation containing every vertex (one column selected by
     *              `node`); duplicates tolerated (distinct applied)
@@ -73,7 +73,7 @@ object Graphs {
       iters: Int,
       damping: Double = 0.85,
       scale: Int = 7,
-      convergeEarly: Boolean = false): DataFrame = {
+      convergeEarly: Boolean = false): DataFrame = Materialize.scope {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val spark = nodes.sparkSession
@@ -93,7 +93,7 @@ object Graphs {
       v.join(outdeg, Seq("node"), "left").na.fill(0L, Seq("outdeg")))
 
     val init = round(lit(1.0 / n), scale)
-    val out = prIterations(
+    prIterations(
       withDeg.select(col("node"), col("outdeg"), init.as("rank")), e, iters,
       (inflow, dangling) =>
         round(
@@ -101,9 +101,6 @@ object Graphs {
             lit(damping) * (inflow + dangling / lit(n)),
           scale),
       convergeEarly)
-    // the returned state is checkpointed — the loop inputs are dead
-    v.unpersist(); e.unpersist(); withDeg.unpersist()
-    out
   }
 
   /** WEIGHTED PageRank: rank flows along each edge in proportion to its
@@ -134,7 +131,7 @@ object Graphs {
       iters: Int,
       damping: Double = 0.85,
       scale: Int = 7,
-      convergeEarly: Boolean = false): DataFrame = {
+      convergeEarly: Boolean = false): DataFrame = Materialize.scope {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -164,10 +161,10 @@ object Graphs {
     val withDeg = Materialize(
       v.join(outw.withColumnRenamed("src", "node"), Seq("node"), "left")
         .select(col("node"), coalesce(col("outw"), lit(0.0)).as("outdeg")))
-    e0.unpersist()
+    Materialize.release(e0)
 
     val init = round(lit(1.0 / n), scale)
-    val out = prIterations(
+    prIterations(
       withDeg.select(col("node"), col("outdeg"), init.as("rank")), e, iters,
       (inflow, dangling) =>
         round(
@@ -175,8 +172,6 @@ object Graphs {
             lit(damping) * (inflow + dangling / lit(n)),
           scale),
       convergeEarly)
-    v.unpersist(); e.unpersist(); withDeg.unpersist()
-    out
   }
 
   /** Personalized PageRank (TrustRank): the teleport distribution is
@@ -204,7 +199,7 @@ object Graphs {
       iters: Int,
       damping: Double = 0.85,
       scale: Int = 7,
-      convergeEarly: Boolean = false): DataFrame = {
+      convergeEarly: Boolean = false): DataFrame = Materialize.scope {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
@@ -229,7 +224,7 @@ object Graphs {
         .withColumn("t", when(col("__isSeed"), lit(1.0 / ns)).otherwise(lit(0.0)))
         .drop("__isSeed"))
 
-    val out = prIterations(
+    prIterations(
       withT.select(col("node"), col("outdeg"), col("t"), round(col("t"), scale).as("rank")),
       e, iters,
       (inflow, dangling) =>
@@ -238,8 +233,6 @@ object Graphs {
             lit(damping) * (inflow + col("t") * dangling),
           scale),
       convergeEarly)
-    v.unpersist(); e.unpersist(); withT.unpersist()
-    out
   }
 
   /** The synchronous rank loop shared by [[pageRank]] and
@@ -247,7 +240,7 @@ object Graphs {
     * plus any teleport columns `update` references; each round computes
     * the dangling scalar (bounded driver state) and the inflow aggregate,
     * applies `update(coalesced inflow, dangling)`, and re-materializes —
-    * lineage cut per round, superseded blocks unpersisted.
+    * lineage cut per round, superseded blocks released.
     *
     * `convergeEarly` stops as soon as a round leaves every rank UNCHANGED
     * on the 10^-scale grid (`max|rank' − rank| = 0` — one bounded scalar
@@ -271,10 +264,11 @@ object Graphs {
     var fixed = false
     while (round < iters && !fixed) {
       // The dangling mass rides as a broadcast ONE-ROW relation instead of
-      // a per-iteration driver collect: the whole round is a single job
-      // (the scalar aggregate is a broadcast subtree of it), which halves
-      // the scheduling round-trips the loop pays on small graphs and
-      // changes nothing at scale.
+      // a per-iteration driver collect: the scalar aggregate is a
+      // broadcast subtree of the round's materialization, so the round
+      // pays no separate driver action for it. It is not a single job:
+      // under AQE the materialization runs each query stage (the scalar
+      // aggregate, the broadcast, the shuffles) as its own job.
       val dangDf = state.where(col("outdeg") === 0)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dang"))
 
@@ -305,7 +299,7 @@ object Graphs {
         val delta = state.agg(max(abs(col("rank") - col("__prev")))).head().getDouble(0)
         fixed = delta == 0.0
       }
-      prev.unpersist()
+      Materialize.release(prev)
       round += 1
     }
     state.select(col("node"), col("rank"))
@@ -331,7 +325,7 @@ object Graphs {
       dst: Column,
       seeds: DataFrame,
       seed: Column,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Materialize.scope {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = Materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
@@ -354,22 +348,20 @@ object Graphs {
           .withColumn("hops", lit(h)))
       // the previous frontier fed `expanded`, which is now materialized
       // into `fresh` — its blocks are dead
-      prevFresh.foreach(_.unpersist())
+      prevFresh.foreach(Materialize.release)
       if (fresh.isEmpty) {
         exhausted = true
-        fresh.unpersist()
+        Materialize.release(fresh)
         prevFresh = None
       } else {
         val prev = reached
         reached = Materialize(prev.unionByName(fresh))
         frontier = fresh.select(col("node"))
         prevFresh = Some(fresh)
-        prev.unpersist()
+        Materialize.release(prev)
       }
       h += 1
     }
-    prevFresh.foreach(_.unpersist())
-    e.unpersist()
     reached
   }
 
@@ -399,7 +391,7 @@ object Graphs {
       src: Column,
       dst: Column,
       maxHops: Int,
-      scale: Int = 6): DataFrame = {
+      scale: Int = 6): DataFrame = Materialize.scope {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val e = Materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
@@ -420,22 +412,20 @@ object Graphs {
       val fresh = Materialize(
         expanded.join(reached.select(col("root"), col("node")), Seq("root", "node"), "left_anti")
           .withColumn("dist", lit(h)))
-      prevFresh.foreach(_.unpersist())
+      prevFresh.foreach(Materialize.release)
       if (fresh.isEmpty) {
         exhausted = true
-        fresh.unpersist()
+        Materialize.release(fresh)
         prevFresh = None
       } else {
         val prev = reached
         reached = Materialize(prev.unionByName(fresh))
         frontier = fresh.select(col("root"), col("node"))
         prevFresh = Some(fresh)
-        prev.unpersist()
+        Materialize.release(prev)
       }
       h += 1
     }
-    prevFresh.foreach(_.unpersist())
-    e.unpersist()
 
     // per-distance counts, then an ORDERED fold over ≤ maxHops terms
     val byDist = reached.where(col("dist") > 0)
@@ -507,7 +497,7 @@ object Graphs {
       sources: DataFrame,
       sourceCol: Column,
       maxHops: Int,
-      scale: Int = 6): DataFrame = {
+      scale: Int = 6): DataFrame = Materialize.scope {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val gridP = math.pow(10, scale)
     def gridFloor(c: Column): Column = floor(c * gridP + 0.5) / gridP
@@ -542,7 +532,7 @@ object Graphs {
       val stats = fresh.agg(count(lit(1)), max(col("sigma"))).head()
       if (stats.getLong(0) == 0L) {
         exhausted = true
-        fresh.unpersist()
+        Materialize.release(fresh)
       } else {
         // loud overflow guard: σ must stay far from Long.Max (sum wraps
         // silently); trip at 2^62 so one more doubling cannot wrap
@@ -551,9 +541,10 @@ object Graphs {
           s"betweennessKSources: path counts overflow LONG at level $h (max σ = $mx) — " +
             "lower maxHops or shrink the source ball")
         levels += fresh
-        reached = reached.unionByName(fresh.select(col("root"), col("node")))
         // reached grows each round; re-materialize to cut the union lineage
-        reached = Materialize(reached)
+        val prevReached = reached
+        reached = Materialize(prevReached.unionByName(fresh.select(col("root"), col("node"))))
+        Materialize.release(prevReached)
       }
       h += 1
     }
@@ -592,21 +583,18 @@ object Graphs {
     }
 
     // ---- accumulate: B(v) = ordered fold of δ over roots ----
-    val out =
-      if (deltas.isEmpty)
-        nodes.select(col("node"), lit(0.0).as("betweenness"))
-      else {
-        val allDeltas = deltas.reduce(_ unionByName _)
-        val bw = allDeltas
-          .groupBy(col("node"))
-          .agg(gridFloor(
-            aggregate(sort_array(collect_list(struct(col("root"), col("delta")))),
-              lit(0.0), (acc, t) => acc + t.getField("delta"))).as("betweenness"))
-        nodes.join(bw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("betweenness"), lit(0.0)).as("betweenness"))
-      }
-    e.unpersist()
-    out
+    if (deltas.isEmpty)
+      nodes.select(col("node"), lit(0.0).as("betweenness"))
+    else {
+      val allDeltas = deltas.reduce(_ unionByName _)
+      val bw = allDeltas
+        .groupBy(col("node"))
+        .agg(gridFloor(
+          aggregate(sort_array(collect_list(struct(col("root"), col("delta")))),
+            lit(0.0), (acc, t) => acc + t.getField("delta"))).as("betweenness"))
+      nodes.join(bw, Seq("node"), "left")
+        .select(col("node"), coalesce(col("betweenness"), lit(0.0)).as("betweenness"))
+    }
   }
 
   /** Per-vertex triangle counts on the simple UNDIRECTED graph induced by
@@ -632,7 +620,7 @@ object Graphs {
     * the closing corners (one codegen stage, no wedge-row relation ever
     * materialized) → explode the 3 corners → count per vertex.
     */
-  def triangleCounts(edges: DataFrame, endA: Column, endB: Column): DataFrame = {
+  def triangleCounts(edges: DataFrame, endA: Column, endB: Column): DataFrame = Materialize.scope {
     val (_, _, triangles) = triangleMachinery(edges, endA, endB)
     triangleCountsFrom(triangles)
   }
@@ -652,7 +640,7 @@ object Graphs {
       edges: DataFrame,
       endA: Column,
       endB: Column,
-      scale: Int = 4): (DataFrame, DataFrame) = {
+      scale: Int = 4): (DataFrame, DataFrame) = Materialize.scope {
     val (canon, deg, tri0) = triangleMachinery(edges, endA, endB)
     val triangles = Materialize(tri0)
     (triangleCountsFrom(triangles), edgeJaccardFrom(canon, deg, triangles, scale))
@@ -681,10 +669,11 @@ object Graphs {
     * @param scale decimal grid for the reported jaccard
     * @return (lo, hi, common LONG, jaccard DOUBLE), one row per edge
     */
-  def edgeJaccard(edges: DataFrame, endA: Column, endB: Column, scale: Int = 4): DataFrame = {
-    val (canon, deg, triangles) = triangleMachinery(edges, endA, endB)
-    edgeJaccardFrom(canon, deg, triangles, scale)
-  }
+  def edgeJaccard(edges: DataFrame, endA: Column, endB: Column, scale: Int = 4): DataFrame =
+    Materialize.scope {
+      val (canon, deg, triangles) = triangleMachinery(edges, endA, endB)
+      edgeJaccardFrom(canon, deg, triangles, scale)
+    }
 
   private def edgeJaccardFrom(
       canon: DataFrame,
@@ -824,7 +813,7 @@ object Graphs {
     * argmax aggregate (max of a (count, −label) struct — no window, no
     * sort) + a left join back to the node set for isolated nodes. Label
     * state is re-materialized per round (lineage cut), superseded blocks
-    * unpersisted — the [[pageRank]] loop discipline.
+    * released — the [[pageRank]] loop discipline.
     *
     * @return (node LONG, label LONG) — one row per distinct node
     */
@@ -832,7 +821,7 @@ object Graphs {
       edges: DataFrame,
       endA: Column,
       endB: Column,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Materialize.scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val canon = Materialize(
       edges.select(endA.cast("long").as("a"), endB.cast("long").as("b"))
@@ -862,11 +851,9 @@ object Graphs {
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
       val prev = labels
       labels = Materialize(next)
-      prev.unpersist()
+      Materialize.release(prev)
     }
-    val out = labels
-    canon.unpersist(); adj.unpersist(); nodes.unpersist()
-    out
+    labels
   }
 
   /** Connected components of the simple undirected graph: every node of
@@ -910,7 +897,7 @@ object Graphs {
       threshold: Long,
       maxRounds: Int = 64,
       localEdges: Long = MsfLocalEdges
-  ): DataFrame = {
+  ): DataFrame = Materialize.scope {
     // the edge relation is consumed twice (node set + MSF input) — pay
     // its derivation once; the node relation stays materialized because
     // the returned labeling plan serves from it (bounded: one row per
@@ -924,10 +911,8 @@ object Graphs {
     val kept = minimumSpanningForest(e, col("a"), col("b"), col("w"), maxRounds, localEdges)
       .where(col("w") <= threshold)
     val cc = connectedComponents(kept, col("u"), col("v"))
-    val out = nodes.join(cc, Seq("node"), "left")
+    nodes.join(cc, Seq("node"), "left")
       .select(col("node"), coalesce(col("component"), col("node")).as("cluster"))
-    e.unpersist()
-    out
   }
 
   /** MINIMUM SPANNING FOREST of the weighted simple undirected graph, by
@@ -976,7 +961,7 @@ object Graphs {
       weight: Column,
       maxRounds: Int = 64,
       localEdges: Long = MsfLocalEdges
-  ): DataFrame = {
+  ): DataFrame = Materialize.scope {
     val e0 = edges.select(endA.cast("long").as("a"), endB.cast("long").as("b"),
         weight.cast("long").as("w"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
@@ -989,7 +974,6 @@ object Graphs {
       val sorted = live.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(e => (e._3, e._1, e._2))
-      live.unpersist()
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       // ITERATIVE find with full path compression: a recursive form would
       // recurse as deep as the parent chain — a million-node path built
@@ -1029,31 +1013,32 @@ object Graphs {
           .distinct())
       if (chosen.isEmpty) {
         done = true
-        chosen.unpersist()
+        Materialize.release(chosen)
       } else {
         val prevForest = forest
-        // materialize the grown forest BEFORE unpersisting its inputs
+        // materialize the grown forest BEFORE releasing its inputs
         forest = Materialize(
           if (forest == null) chosen.select(col("u"), col("v"), col("w"))
           else forest.unionByName(chosen.select(col("u"), col("v"), col("w"))))
-        if (prevForest != null) prevForest.unpersist()
+        if (prevForest != null) Materialize.release(prevForest)
         // contract: relabel merged components to their new (min) label;
-        // untouched components keep theirs
-        val relabel = connectedComponents(
-          chosen.select(col("cu"), col("cv")), col("cu"), col("cv"))
+        // untouched components keep theirs. The round's own scope frees
+        // the CC labels once the new component state is materialized.
         val prev = comp
-        comp = Materialize(
-          prev.join(relabel.select(col("node").as("c"), col("component").as("__nc")),
-              Seq("c"), "left")
-            .select(col("node"), coalesce(col("__nc"), col("c")).as("c")))
-        prev.unpersist()
-        chosen.unpersist()
+        comp = Materialize.scope {
+          val relabel = connectedComponents(
+            chosen.select(col("cu"), col("cv")), col("cu"), col("cv"))
+          Materialize(
+            prev.join(relabel.select(col("node").as("c"), col("component").as("__nc")),
+                Seq("c"), "left")
+              .select(col("node"), coalesce(col("__nc"), col("c")).as("c")))
+        }
+        Materialize.release(prev)
+        Materialize.release(chosen)
       }
       round += 1
     }
     require(done, s"minimumSpanningForest did not converge in $maxRounds rounds")
-    live.unpersist()
-    comp.unpersist()
     if (forest == null)
       live.sparkSession.emptyDataFrame
         .select(lit(0L).as("u"), lit(0L).as("v"), lit(0L).as("w")).limit(0)
@@ -1077,7 +1062,7 @@ object Graphs {
     * the surviving edges + two semi-joins (edges whose BOTH endpoints
     * survive) + one bounded count for the exit test; the edge relation is
     * re-materialized per round (lineage cut), superseded blocks
-    * unpersisted.
+    * released.
     *
     * @return (node LONG, deg LONG) — core membership with the degree
     *         inside the core
@@ -1087,7 +1072,7 @@ object Graphs {
       endA: Column,
       endB: Column,
       k: Int,
-      maxRounds: Int = 50): DataFrame = {
+      maxRounds: Int = 50): DataFrame = Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     var e = Materialize(
@@ -1117,13 +1102,12 @@ object Graphs {
       val nextCount = next.count()
       stable = nextCount == eCount
       eCount = nextCount
-      e.unpersist()
+      Materialize.release(e)
       e = next
       round += 1
     }
-    val out = e.select(explode(array(col("lo"), col("hi"))).as("node"))
+    e.select(explode(array(col("lo"), col("hi"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    out
   }
 
   /** k-TRUSS membership at a fixed `k`: the maximal subgraph in which
@@ -1157,7 +1141,7 @@ object Graphs {
       endA: Column,
       endB: Column,
       k: Int,
-      maxRounds: Int = 30): DataFrame = {
+      maxRounds: Int = 30): DataFrame = Materialize.scope {
     require(k >= 3, s"k must be >= 3 (k-2 >= 1 triangle per edge), got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val minSup = k - 2L
@@ -1198,11 +1182,12 @@ object Graphs {
       // readout free: at the fixpoint every edge of e survives, so the
       // last round's keep relation is exactly supportOf(e_final) — the
       // old readout recomputed one full extra triangle pass for it.
-      val keep = Materialize(supportOf(e).where(col("support") >= minSup))
+      // (the round's own scope frees its triangle machinery's checkpoint)
+      val keep = Materialize.scope(Materialize(supportOf(e).where(col("support") >= minSup)))
       val nextCount = keep.count()
       stable = nextCount == eCount
       eCount = nextCount
-      eOwned.unpersist()
+      Materialize.release(eOwned)
       eOwned = keep
       e = keep.select(col("lo"), col("hi"))
       round += 1
@@ -1234,7 +1219,7 @@ object Graphs {
     * Scale shape per round: one join of the FRONTIER against the edge
     * relation + one map-side-combined min aggregate + one full-outer
     * merge into the distance state; state re-materialized per round
-    * (lineage cut), superseded blocks unpersisted.
+    * (lineage cut), superseded blocks released.
     *
     * @return (node LONG, dist LONG) — every node reachable within
     *         `maxHops` hops, seeds at 0
@@ -1246,7 +1231,7 @@ object Graphs {
       weight: Column,
       seeds: DataFrame,
       seed: Column,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Materialize.scope {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = Materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"),
@@ -1269,20 +1254,18 @@ object Graphs {
         cand.join(dist, Seq("node"), "left")
           .where(col("dist").isNull || col("cand") < col("dist"))
           .select(col("node"), col("cand").as("dist")))
-      if (improved.isEmpty) { live = false; improved.unpersist() }
+      if (improved.isEmpty) { live = false; Materialize.release(improved) }
       else {
         val prev = dist
         dist = Materialize(
           prev.join(improved.withColumnRenamed("dist", "__d"), Seq("node"), "full_outer")
             .select(col("node"), coalesce(col("__d"), col("dist")).as("dist")))
-        if (frontier ne prev) frontier.unpersist()
-        prev.unpersist()
+        if (frontier ne prev) Materialize.release(frontier)
+        Materialize.release(prev)
         frontier = improved
       }
       h += 1
     }
-    if (frontier ne dist) frontier.unpersist()
-    e.unpersist()
     dist
   }
 
@@ -1336,7 +1319,7 @@ object Graphs {
     * Scale shape above the threshold: every step is frontier-bounded
     * joins + map-side-combined aggregates over the REMAINING edge
     * relation; state is re-materialized per round (lineage cut),
-    * superseded blocks unpersisted. Isolated vertices (no edge) do not
+    * superseded blocks released. Isolated vertices (no edge) do not
     * appear — the [[connectedComponents]] convention.
     *
     * @return (node LONG, scc LONG) — one row per distinct endpoint
@@ -1346,7 +1329,7 @@ object Graphs {
       src: Column,
       dst: Column,
       maxOuterRounds: Int = 100,
-      localEdges: Long = 2000000L): DataFrame = {
+      localEdges: Long = 2000000L): DataFrame = Materialize.scope {
     require(maxOuterRounds >= 1, s"maxOuterRounds must be >= 1, got $maxOuterRounds")
     var e = Materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
@@ -1365,7 +1348,7 @@ object Graphs {
     def emit(assign: DataFrame): Unit = {
       val prev = done
       done = Materialize(prev.unionByName(assign))
-      prev.unpersist()
+      Materialize.release(prev)
     }
 
     var eCount = e.count()
@@ -1387,7 +1370,7 @@ object Graphs {
         val t = Materialize(
           srcs.join(dsts, Seq("node"), "left_anti") // out-edges, no in-edge
             .unionByName(dsts.join(srcs, Seq("node"), "left_anti"))) // in, no out
-        if (t.isEmpty) { trimming = false; t.unpersist() }
+        if (t.isEmpty) { trimming = false; Materialize.release(t) }
         else {
           emit(t.select(col("node"), col("node").as("scc")))
           val prevE = e
@@ -1396,7 +1379,7 @@ object Graphs {
             .join(t.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
             .select(col("src"), col("dst")))
           eCount = e.count()
-          prevE.unpersist(); t.unpersist()
+          Materialize.release(prevE); Materialize.release(t)
         }
       }
       if (eCount > 0) {
@@ -1413,18 +1396,18 @@ object Graphs {
           val improved = Materialize(pushed.join(colors, Seq("node"))
             .where(col("cand") < col("color"))
             .select(col("node"), col("cand").as("color")))
-          if (improved.isEmpty) { moving = false; improved.unpersist() }
+          if (improved.isEmpty) { moving = false; Materialize.release(improved) }
           else {
             val prevC = colors
             colors = Materialize(prevC
               .join(improved.withColumnRenamed("color", "__c"), Seq("node"), "left")
               .select(col("node"), coalesce(col("__c"), col("color")).as("color")))
-            if (frontier ne prevC) frontier.unpersist()
-            prevC.unpersist()
+            if (frontier ne prevC) Materialize.release(frontier)
+            Materialize.release(prevC)
             frontier = improved
           }
         }
-        if (frontier ne colors) frontier.unpersist()
+        if (frontier ne colors) Materialize.release(frontier)
 
         // ---- 3. backward sweep along SAME-COLOR edges from the roots --
         var flagged = Materialize(colors.where(col("node") === col("color")))
@@ -1439,16 +1422,16 @@ object Graphs {
             .where(col("color") === col("__uc"))
             .select(col("node"), col("color"))
             .join(flagged.select(col("node")), Seq("node"), "left_anti"))
-          if (fresh.isEmpty) { growing = false; fresh.unpersist() }
+          if (fresh.isEmpty) { growing = false; Materialize.release(fresh) }
           else {
             val prevF = flagged
             flagged = Materialize(prevF.unionByName(fresh))
-            if (bFront ne prevF) bFront.unpersist()
-            prevF.unpersist()
+            if (bFront ne prevF) Materialize.release(bFront)
+            Materialize.release(prevF)
             bFront = fresh
           }
         }
-        if (bFront ne flagged) bFront.unpersist()
+        if (bFront ne flagged) Materialize.release(bFront)
 
         // ---- 4. emit the flagged SCCs, peel them off ------------------
         emit(flagged.select(col("node"), col("color").as("scc")))
@@ -1457,7 +1440,7 @@ object Graphs {
           .join(flagged.select(col("node").as("src")), Seq("src"), "left_anti")
           .join(flagged.select(col("node").as("dst")), Seq("dst"), "left_anti"))
         eCount = e.count()
-        prevE.unpersist(); nodes.unpersist(); colors.unpersist(); flagged.unpersist()
+        Seq(prevE, nodes, colors, flagged).foreach(Materialize.release)
       }
       }
       outer += 1
@@ -1467,7 +1450,6 @@ object Graphs {
         s"stronglyConnectedComponents did not converge in $maxOuterRounds outer rounds " +
           s"($eCount edges remain) — raise maxOuterRounds; a truncated decomposition " +
           "is not a canonical answer and will not be returned as one")
-    e.unpersist()
     // endpoints never emitted lost all their edges to removed neighbors:
     // singletons in every remaining view, scc = self
     done.unionByName(

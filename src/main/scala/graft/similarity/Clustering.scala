@@ -174,7 +174,7 @@ object Clustering {
       id: Column,
       vec: Column,
       k: Int,
-      distScale: Int = 6): DataFrame = {
+      distScale: Int = 6): DataFrame = graft.Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
     import spark.implicits._
@@ -201,9 +201,8 @@ object Clustering {
       val prev = state
       state = graft.Materialize(
         prev.select(col("id"), col("v"), least(col("d"), distTo(center)).as("d")))
-      prev.unpersist()
+      graft.Materialize.release(prev)
     }
-    state.unpersist()
     selected.zipWithIndex
       .map { case ((i, d), r) => (r, i, d) }
       .toDF("sel_rank", "id", "dist")

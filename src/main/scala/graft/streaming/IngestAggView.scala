@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.sources.Storage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -51,40 +52,38 @@ final class IngestAggView(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(baseTable) && spark.catalog.tableExists(viewTable),
       s"IngestAggView: '$baseTable' and '$viewTable' must be initialized before the stream starts")
 
-    val changes = batch.persist()
-    try {
-      val inserts = changes.where(col("op") === "insert")
-        .select(col(rowId), col(key), col(value))
-      val deleteIds = changes.where(col("op") === "delete").select(col(rowId))
-      // Catalog-backed reads throughout (never raw path scans): both the
-      // base and the view may legitimately reach ZERO rows (every row /
-      // every key deleted), and a bare parquet directory with no data
-      // files cannot infer a schema — the catalog always knows it.
-      spark.sql(s"REFRESH TABLE $baseTable")
-      val base = spark.table(baseTable)
+    val changes = Materialize.persist(batch)
+    val inserts = changes.where(col("op") === "insert")
+      .select(col(rowId), col(key), col(value))
+    val deleteIds = changes.where(col("op") === "delete").select(col(rowId))
+    // Catalog-backed reads throughout (never raw path scans): both the
+    // base and the view may legitimately reach ZERO rows (every row /
+    // every key deleted), and a bare parquet directory with no data
+    // files cannot infer a schema — the catalog always knows it.
+    spark.sql(s"REFRESH TABLE $baseTable")
+    val base = spark.table(baseTable)
 
-      // 1) view update, guarded for replay ([[IvmMaintenance]] pieces 1+2)
-      spark.sql(s"REFRESH TABLE $viewTable")
-      val view = spark.table(viewTable)
-      if (batchId > IvmMaintenance.lastApplied(view)) {
-        val merged = Storage.mergeAggDelta(
-            view.where(col("n").isNotNull).drop("__batch"),
-            base, inserts, deleteIds, rowId, key, value)
-          .withColumn("__batch", lit(batchId))
-        IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
-      }
+    // 1) view update, guarded for replay ([[IvmMaintenance]] pieces 1+2)
+    spark.sql(s"REFRESH TABLE $viewTable")
+    val view = spark.table(viewTable)
+    if (batchId > IvmMaintenance.lastApplied(view)) {
+      val merged = Storage.mergeAggDelta(
+          view.where(col("n").isNotNull).drop("__batch"),
+          base, inserts, deleteIds, rowId, key, value)
+        .withColumn("__batch", lit(batchId))
+      IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
+    }
 
-      // 2) base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
-      //    piece 4). This feed carries the key on DELETE rows too, so
-      //    touched buckets derive from the changes relation directly.
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, baseTable, base, inserts, deleteIds, Seq(rowId), key, buckets,
-        touchedFromChanges = Some(changes.select(col(key))))
-    } finally changes.unpersist()
+    // 2) base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
+    //    piece 4). This feed carries the key on DELETE rows too, so
+    //    touched buckets derive from the changes relation directly.
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, baseTable, base, inserts, deleteIds, Seq(rowId), key, buckets,
+      touchedFromChanges = Some(changes.select(col(key))))
   }
 }

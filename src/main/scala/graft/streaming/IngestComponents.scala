@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,43 +49,37 @@ final class IngestComponents(
     buckets: Int = 32
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(labelsTable),
       s"IngestComponents: '$labelsTable' must be initialized before the stream starts")
-    val edges = batch
+    val edges = Materialize.persist(batch
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .persist()
-    try {
-      spark.sql(s"REFRESH TABLE $labelsTable")
-      val prev = spark.table(labelsTable)
-      val endpoints = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      // the components this batch can touch: the endpoints' current roots
-      // (bounded by 2·|batch| — a driver list, the touched-bucket
-      // discipline). Their bucket ids are read off the TABLE rows, never
-      // re-derived driver-side — one hash definition, the table's.
-      val rootRows = prev.join(broadcast(endpoints), Seq("node"), "left_semi")
-        .select(col("component"), col("bkt")).distinct().collect()
-      val roots = rootRows.map(_.getLong(0)).toSeq
-      val rootBkts = rootRows.map(_.getInt(1)).distinct.toSeq
-      val affected =
-        if (roots.isEmpty) prev.where(lit(false))
-        else prev.where(col("bkt").isin(rootBkts: _*))
-          .where(col("component").isin(roots: _*))
-          .select(col("node"), col("component"))
-      // re-label ONLY the affected neighborhood: its stars + the batch
-      val stars = affected.where(col("node") =!= col("component"))
-        .select(col("node").as("src"), col("component").as("dst"))
-      val cc = graft.graphs.Graphs.connectedComponents(
-        stars.unionByName(edges), col("src"), col("dst"))
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, labelsTable, prev, cc, affected.select(col("node")),
-        Seq("node"), "component", buckets)
-    } finally {
-      edges.unpersist()
-      ()
-    }
+      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst")))
+    spark.sql(s"REFRESH TABLE $labelsTable")
+    val prev = spark.table(labelsTable)
+    val endpoints = edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node"))).distinct()
+    // the components this batch can touch: the endpoints' current roots
+    // (bounded by 2·|batch| — a driver list, the touched-bucket
+    // discipline). Their bucket ids are read off the TABLE rows, never
+    // re-derived driver-side — one hash definition, the table's.
+    val rootRows = prev.join(broadcast(endpoints), Seq("node"), "left_semi")
+      .select(col("component"), col("bkt")).distinct().collect()
+    val roots = rootRows.map(_.getLong(0)).toSeq
+    val rootBkts = rootRows.map(_.getInt(1)).distinct.toSeq
+    val affected =
+      if (roots.isEmpty) prev.where(lit(false))
+      else prev.where(col("bkt").isin(rootBkts: _*))
+        .where(col("component").isin(roots: _*))
+        .select(col("node"), col("component"))
+    // re-label ONLY the affected neighborhood: its stars + the batch
+    val stars = affected.where(col("node") =!= col("component"))
+      .select(col("node").as("src"), col("component").as("dst"))
+    val cc = graft.graphs.Graphs.connectedComponents(
+      stars.unionByName(edges), col("src"), col("dst"))
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, labelsTable, prev, cc, affected.select(col("node")),
+      Seq("node"), "component", buckets)
   }
 }

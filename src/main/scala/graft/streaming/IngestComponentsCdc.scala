@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -139,15 +140,15 @@ object IngestComponentsCdc {
     // bucket ids read off the TABLE rows, one hash definition, the
     // table's. Casts pin the Long/Int row accessors below against a
     // store bootstrapped with narrower column types.
-    val rootsDf = prev.join(broadcast(endpoints), Seq("node"), "left_semi")
+    val rootsDf = Materialize.persist(prev.join(broadcast(endpoints), Seq("node"), "left_semi")
       .select(col("component").cast("long").as("component"),
         col("bkt").cast("int").as("bkt"))
-      .distinct().persist()
+      .distinct())
     val nRoots = rootsDf.count()
     val affected = affectedMembers(prev, rootsDf, nRoots, isinRootLimit)
-    val touchNodes = affected.unionByName(endpoints).distinct().persist()
+    val touchNodes = Materialize.persist(affected.unionByName(endpoints).distinct())
     touchNodes.count() // materialize while the roots cache is live
-    rootsDf.unpersist()
+    Materialize.release(rootsDf)
     // an edge of an affected component has BOTH endpoints affected (live
     // edges never span components), but filter both sides anyway — it
     // costs one more delta-bounded semi-join and drops the
@@ -168,43 +169,32 @@ final class IngestComponentsCdc(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(labelsTable),
       s"IngestComponentsCdc: '$edgeTable' and '$labelsTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestComponentsCdc", batch)
-    val ins = ins0.select(col("u"), col("v")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    var touchNodes: DataFrame = null
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val postEdges = old.join(delEdges, Seq("u", "v"), "left_anti")
-        .unionByName(newEdges)
-      val (tn, subEdges) = IngestComponentsCdc.affectedSubgraph(
-        spark, labelsTable, postEdges, newEdges, delEdges)
-      touchNodes = tn
-      val cc = graft.graphs.Graphs.connectedComponents(subEdges, col("u"), col("v"))
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, labelsTable, spark.table(labelsTable), cc, touchNodes,
-        Seq("node"), "component", buckets)
+    val postEdges = old.join(delEdges, Seq("u", "v"), "left_anti")
+      .unionByName(newEdges)
+    val (touchNodes, subEdges) = IngestComponentsCdc.affectedSubgraph(
+      spark, labelsTable, postEdges, newEdges, delEdges)
+    val cc = graft.graphs.Graphs.connectedComponents(subEdges, col("u"), col("v"))
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, labelsTable, spark.table(labelsTable), cc, touchNodes,
+      Seq("node"), "component", buckets)
 
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      if (touchNodes != null) { touchNodes.unpersist(); () }
-    }
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

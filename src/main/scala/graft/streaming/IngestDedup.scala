@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.dedup.Dedup
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
@@ -79,7 +80,7 @@ final class IngestDedup private (
     */
   @transient private[graft] var lastFilterMaintenance: String = ""
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     val indexExists = spark.catalog.tableExists(table)
     if (filter == null) {
@@ -94,64 +95,62 @@ final class IngestDedup private (
       .withColumn(hashCol, md5(content))
       .dropDuplicates(hashCol)
       .drop(hashCol)
-    val fresh =
-      (if (indexExists) Dedup.dropSeenFast(deduped, content, spark.table(table), bcast)
-       else deduped).persist()
+    val fresh = Materialize.persist(
+      if (indexExists) Dedup.dropSeenFast(deduped, content, spark.table(table), bcast)
+      else deduped)
+    sink(fresh, batchId)
     try {
-      sink(fresh, batchId)
-      try {
-        Dedup.saveSeen(fresh, content, table, buckets)
-        // filter maintenance, sized to the batch (`fresh` is persisted, so
-        // the count and the hash scan both read the cache): micro-batches
-        // collect bare longs (xxhash64 of the stored md5 — the same key
-        // the filter indexes) into the driver copy; a backfill batch
-        // over the threshold builds executor-side partial filters at the
-        // standing geometry and tree-merges them — O(geometry) driver
-        // bytes instead of O(batch)
-        val hashes = fresh.select(xxhash64(md5(content)).as("h"))
-        if (fresh.count() <= collectThreshold) {
-          lastFilterMaintenance = "collect"
-          hashes.collect().foreach(r => filter.putLong(r.getLong(0)))
-        } else {
-          lastFilterMaintenance = "treeReduce"
-          val items = expectedItems
-          val p = fpp
-          // Each non-empty partition allocates a FULL-geometry filter
-          // (≈ 1.1 GB at 1e9 items / 1% fpp): a many-partition backfill
-          // batch would otherwise hold several concurrent geometry-sized
-          // filters per executor and OOM exactly on the replay batches
-          // this path exists for. Coalesce (no shuffle — partitions merge
-          // locally) to ~2 per executor slot-group so at most a couple of
-          // partial filters are live per executor at once.
-          val raw = hashes.queryExecution.toRdd.map(_.getLong(0))
-          val execs = math.max(1, spark.sparkContext.getExecutorMemoryStatus.size - 1)
-          val bound = math.max(2, 2 * execs)
-          val parts = if (raw.getNumPartitions > bound) raw.coalesce(bound) else raw
-          val delta = parts
-            .mapPartitions { it =>
-              if (it.isEmpty) Iterator.empty
-              else {
-                val bf = BloomFilter.create(items, p)
-                it.foreach(bf.putLong)
-                Iterator.single(bf)
-              }
+      Dedup.saveSeen(fresh, content, table, buckets)
+      // filter maintenance, sized to the batch (`fresh` is persisted, so
+      // the count and the hash scan both read the cache): micro-batches
+      // collect bare longs (xxhash64 of the stored md5 — the same key
+      // the filter indexes) into the driver copy; a backfill batch
+      // over the threshold builds executor-side partial filters at the
+      // standing geometry and tree-merges them — O(geometry) driver
+      // bytes instead of O(batch)
+      val hashes = fresh.select(xxhash64(md5(content)).as("h"))
+      if (fresh.count() <= collectThreshold) {
+        lastFilterMaintenance = "collect"
+        hashes.collect().foreach(r => filter.putLong(r.getLong(0)))
+      } else {
+        lastFilterMaintenance = "treeReduce"
+        val items = expectedItems
+        val p = fpp
+        // Each non-empty partition allocates a FULL-geometry filter
+        // (≈ 1.1 GB at 1e9 items / 1% fpp): a many-partition backfill
+        // batch would otherwise hold several concurrent geometry-sized
+        // filters per executor and OOM exactly on the replay batches
+        // this path exists for. Coalesce (no shuffle — partitions merge
+        // locally) to ~2 per executor slot-group so at most a couple of
+        // partial filters are live per executor at once.
+        val raw = hashes.queryExecution.toRdd.map(_.getLong(0))
+        val execs = math.max(1, spark.sparkContext.getExecutorMemoryStatus.size - 1)
+        val bound = math.max(2, 2 * execs)
+        val parts = if (raw.getNumPartitions > bound) raw.coalesce(bound) else raw
+        val delta = parts
+          .mapPartitions { it =>
+            if (it.isEmpty) Iterator.empty
+            else {
+              val bf = BloomFilter.create(items, p)
+              it.foreach(bf.putLong)
+              Iterator.single(bf)
             }
-            .treeReduce((a, b) => a.mergeInPlace(b), depth = 2)
-          filter.mergeInPlace(delta)
-        }
-        val old = bcast
-        bcast = spark.sparkContext.broadcast(filter)
-        old.destroy()
-      } catch {
-        case t: Throwable =>
-          // the index may now be ahead of the filter — drop the driver
-          // state so the next batch rebuilds from the index (stale-filter
-          // leak prevention; see the delivery-contract scaladoc)
-          filter = null
-          bcast = null
-          throw t
+          }
+          .treeReduce((a, b) => a.mergeInPlace(b), depth = 2)
+        filter.mergeInPlace(delta)
       }
-    } finally fresh.unpersist()
+      val old = bcast
+      bcast = spark.sparkContext.broadcast(filter)
+      old.destroy()
+    } catch {
+      case t: Throwable =>
+        // the index may now be ahead of the filter — drop the driver
+        // state so the next batch rebuilds from the index (stale-filter
+        // leak prevention; see the delivery-contract scaladoc)
+        filter = null
+        bcast = null
+        throw t
+    }
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.sources.Storage
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,39 +36,37 @@ final class IngestDistinctView(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(baseTable) && spark.catalog.tableExists(refTable),
       s"IngestDistinctView: '$baseTable' and '$refTable' must be initialized first")
 
-    val changes = batch.persist()
-    try {
-      val inserts = changes.where(col("op") === "insert")
-        .select(col("row_id"), col("grp"), col("value"))
-      val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
-      spark.sql(s"REFRESH TABLE $baseTable")
-      val base = spark.table(baseTable)
+    val changes = Materialize.persist(batch)
+    val inserts = changes.where(col("op") === "insert")
+      .select(col("row_id"), col("grp"), col("value"))
+    val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
+    spark.sql(s"REFRESH TABLE $baseTable")
+    val base = spark.table(baseTable)
 
-      spark.sql(s"REFRESH TABLE $refTable")
-      val ref = spark.table(refTable)
-      if (batchId > IvmMaintenance.lastApplied(ref)) {
-        IvmMaintenance.assertUniqueInsertIds("IngestDistinctView", inserts, "row_id",
-          "refcounts would double-count while the base keeps one row")
-        IvmMaintenance.assertNoLiveIdReuse("IngestDistinctView", base, inserts,
-          deleteIds, "row_id",
-          "refcount arithmetic has no replace semantics")
-        val merged = Storage.mergeDistinctDelta(
-            ref.where(col("rc").isNotNull).drop("__batch"),
-            base.select(col("row_id"), col("grp"), col("value")),
-            inserts, deleteIds, "row_id", "grp", "value")
-          .withColumn("__batch", lit(batchId))
-        IvmMaintenance.swapViewWithSentinel(spark, refTable, merged, batchId)
-      }
+    spark.sql(s"REFRESH TABLE $refTable")
+    val ref = spark.table(refTable)
+    if (batchId > IvmMaintenance.lastApplied(ref)) {
+      IvmMaintenance.assertUniqueInsertIds("IngestDistinctView", inserts, "row_id",
+        "refcounts would double-count while the base keeps one row")
+      IvmMaintenance.assertNoLiveIdReuse("IngestDistinctView", base, inserts,
+        deleteIds, "row_id",
+        "refcount arithmetic has no replace semantics")
+      val merged = Storage.mergeDistinctDelta(
+          ref.where(col("rc").isNotNull).drop("__batch"),
+          base.select(col("row_id"), col("grp"), col("value")),
+          inserts, deleteIds, "row_id", "grp", "value")
+        .withColumn("__batch", lit(batchId))
+      IvmMaintenance.swapViewWithSentinel(spark, refTable, merged, batchId)
+    }
 
-      // base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
-      // piece 4 — the GROUP is the bucket key)
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
-    } finally changes.unpersist()
+    // base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
+    // piece 4 — the GROUP is the bucket key)
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
   }
 }

@@ -46,69 +46,57 @@ final class IngestEdgeJaccardCdc(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(viewTable),
       s"IngestEdgeJaccardCdc: '$edgeTable' and '$viewTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestEdgeJaccardCdc", batch)
-    val ins = ins0.select(col("u"), col("v")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
-      def incident(edges: DataFrame, nodes: DataFrame): DataFrame = edges
-        .join(broadcast(nodes.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
-        .unionByName(edges
-          .join(broadcast(nodes.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
-          .select(col("u"), col("v")))
-        .distinct()
-      val n1 = mat(newEdges.select(col("u").as("node"))
-        .unionByName(newEdges.select(col("v").as("node")))
-        .unionByName(delEdges.select(col("u").as("node")))
-        .unionByName(delEdges.select(col("v").as("node"))).distinct())
-      val touchedEdges = mat(incident(post, n1))
-      val n2 = mat(n1
-        .unionByName(touchedEdges.select(col("u").as("node")))
-        .unionByName(touchedEdges.select(col("v").as("node"))).distinct())
-      val subEdges = mat(incident(post, n2))
-      val inserts = mat(
-        graft.graphs.Graphs.edgeJaccard(subEdges, col("u"), col("v"))
-          .join(broadcast(touchedEdges
-            .select(col("u").as("lo"), col("v").as("hi"))), Seq("lo", "hi"), "left_semi"))
+    val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
+    def incident(edges: DataFrame, nodes: DataFrame): DataFrame = edges
+      .join(broadcast(nodes.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
+      .unionByName(edges
+        .join(broadcast(nodes.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
+        .select(col("u"), col("v")))
+      .distinct()
+    val n1 = Materialize(newEdges.select(col("u").as("node"))
+      .unionByName(newEdges.select(col("v").as("node")))
+      .unionByName(delEdges.select(col("u").as("node")))
+      .unionByName(delEdges.select(col("v").as("node"))).distinct())
+    val touchedEdges = Materialize(incident(post, n1))
+    val n2 = Materialize(n1
+      .unionByName(touchedEdges.select(col("u").as("node")))
+      .unionByName(touchedEdges.select(col("v").as("node"))).distinct())
+    val subEdges = Materialize(incident(post, n2))
+    val inserts = Materialize(
+      graft.graphs.Graphs.edgeJaccard(subEdges, col("u"), col("v"))
+        .join(broadcast(touchedEdges
+          .select(col("u").as("lo"), col("v").as("hi"))), Seq("lo", "hi"), "left_semi"))
 
-      spark.sql(s"REFRESH TABLE $viewTable")
-      val prev = spark.table(viewTable)
-      val drops = mat(prev
-        .join(broadcast(n1.withColumnRenamed("node", "lo")), Seq("lo"), "left_semi")
-        .select(col("lo"), col("hi"))
-        .unionByName(prev
-          .join(broadcast(n1.withColumnRenamed("node", "hi")), Seq("hi"), "left_semi")
-          .select(col("lo"), col("hi")))
-        .distinct())
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, viewTable, prev, inserts, drops,
-        Seq("lo", "hi"), "lo", buckets)
+    spark.sql(s"REFRESH TABLE $viewTable")
+    val prev = spark.table(viewTable)
+    val drops = Materialize(prev
+      .join(broadcast(n1.withColumnRenamed("node", "lo")), Seq("lo"), "left_semi")
+      .select(col("lo"), col("hi"))
+      .unionByName(prev
+        .join(broadcast(n1.withColumnRenamed("node", "hi")), Seq("hi"), "left_semi")
+        .select(col("lo"), col("hi")))
+      .distinct())
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, viewTable, prev, inserts, drops,
+      Seq("lo", "hi"), "lo", buckets)
 
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
-    }
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

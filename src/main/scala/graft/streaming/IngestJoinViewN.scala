@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.sources.Storage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -50,53 +51,51 @@ final class IngestJoinViewN(
 
   private def bucketKey(i: Int): String = if (i == 0) keys(0) else keys(i - 1)
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require((tables :+ viewTable).forall(spark.catalog.tableExists),
       s"IngestJoinViewN: ${(tables :+ viewTable).mkString(", ")} must be initialized first")
 
-    val changes = batch.persist()
-    try {
-      tables.foreach(t => spark.sql(s"REFRESH TABLE $t"))
-      val olds = tables.map(spark.table)
-      val ins = (0 until n).map { i =>
-        changes.where(col("side") === i.toString && col("op") === "insert")
-          .select(("row_id" +: payload(i)).map(col): _*)
-      }
-      val del = (0 until n).map { i =>
-        changes.where(col("side") === i.toString && col("op") === "delete")
-          .select(col("row_id"))
-      }
-      val deltas = (0 until n).map { i =>
-        val cols = payload(i).map(col)
-        ins(i).select(cols :+ lit(1).as("sign"): _*)
-          .unionByName(olds(i).join(del(i), Seq("row_id"), "left_semi")
-            .select(cols :+ lit(-1).as("sign"): _*))
-      }
+    val changes = Materialize.persist(batch)
+    tables.foreach(t => spark.sql(s"REFRESH TABLE $t"))
+    val olds = tables.map(spark.table)
+    val ins = (0 until n).map { i =>
+      changes.where(col("side") === i.toString && col("op") === "insert")
+        .select(("row_id" +: payload(i)).map(col): _*)
+    }
+    val del = (0 until n).map { i =>
+      changes.where(col("side") === i.toString && col("op") === "delete")
+        .select(col("row_id"))
+    }
+    val deltas = (0 until n).map { i =>
+      val cols = payload(i).map(col)
+      ins(i).select(cols :+ lit(1).as("sign"): _*)
+        .unionByName(olds(i).join(del(i), Seq("row_id"), "left_semi")
+          .select(cols :+ lit(-1).as("sign"): _*))
+    }
 
-      spark.sql(s"REFRESH TABLE $viewTable")
-      val view = spark.table(viewTable)
-      if (batchId > IvmMaintenance.lastApplied(view)) {
-        (0 until n).foreach { i =>
-          IvmMaintenance.assertUniqueInsertIds(s"IngestJoinViewN side $i", ins(i), "row_id",
-            "the delta algebra counts each insert while the bucket rebuild keeps " +
-              "one row per id")
-          IvmMaintenance.assertNoLiveIdReuse(s"IngestJoinViewN side $i", olds(i), ins(i),
-            del(i), "row_id",
-            "the base rebuild drops the old row while the view delta never subtracted it")
-        }
-        val merged = Storage.mergeJoinViewNDelta(
-            view.where(col("n").isNotNull).drop("__batch"),
-            (0 until n).map(i => olds(i).select(payload(i).map(col): _*)),
-            deltas, keys)
-          .withColumn("__batch", lit(batchId))
-        IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
-      }
-
+    spark.sql(s"REFRESH TABLE $viewTable")
+    val view = spark.table(viewTable)
+    if (batchId > IvmMaintenance.lastApplied(view)) {
       (0 until n).foreach { i =>
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, tables(i), olds(i), ins(i), del(i), Seq("row_id"), bucketKey(i), buckets)
+        IvmMaintenance.assertUniqueInsertIds(s"IngestJoinViewN side $i", ins(i), "row_id",
+          "the delta algebra counts each insert while the bucket rebuild keeps " +
+            "one row per id")
+        IvmMaintenance.assertNoLiveIdReuse(s"IngestJoinViewN side $i", olds(i), ins(i),
+          del(i), "row_id",
+          "the base rebuild drops the old row while the view delta never subtracted it")
       }
-    } finally changes.unpersist()
+      val merged = Storage.mergeJoinViewNDelta(
+          view.where(col("n").isNotNull).drop("__batch"),
+          (0 until n).map(i => olds(i).select(payload(i).map(col): _*)),
+          deltas, keys)
+        .withColumn("__batch", lit(batchId))
+      IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
+    }
+
+    (0 until n).foreach { i =>
+      IvmMaintenance.rebuildTouchedBuckets(
+        spark, tables(i), olds(i), ins(i), del(i), Seq("row_id"), bucketKey(i), buckets)
+    }
   }
 }

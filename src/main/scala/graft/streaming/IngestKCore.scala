@@ -71,13 +71,12 @@ object IngestKCore {
       core: DataFrame,
       seedEndpoints: DataFrame,
       k: Int,
-      maxRounds: Int,
-      mat: DataFrame => DataFrame): DataFrame = {
+      maxRounds: Int): DataFrame = {
     def degEnough(nodes: DataFrame): DataFrame =
       adjOf(post, nodes).groupBy(col("x")).agg(count(lit(1)).as("d"))
         .where(col("d") >= k).select(col("x").as("node"))
 
-    var x = mat(degEnough(minusBig(seedEndpoints, core)))
+    var x = Materialize(degEnough(minusBig(seedEndpoints, core)))
     var frontier = x
     var round = 0
     while (!frontier.isEmpty) {
@@ -87,14 +86,14 @@ object IngestKCore {
           s"affected region keeps growing; raise maxRounds or recompute from scratch")
       val nbrs = adjOf(post, frontier).select(col("w").as("node")).distinct()
         .join(broadcast(x), Seq("node"), "left_anti")
-      frontier = mat(degEnough(minusBig(nbrs, core)))
-      x = mat(x.unionByName(frontier))
+      frontier = Materialize(degEnough(minusBig(nbrs, core)))
+      x = Materialize(x.unionByName(frontier))
     }
     if (x.isEmpty) x
     else {
-      val adjX = mat(adjOf(post, x))
+      val adjX = Materialize(adjOf(post, x))
       val adjW = adjX.select(col("w").as("node")).distinct()
-      val sCredit = mat(adjX
+      val sCredit = Materialize(adjX
         .join(broadcast(interBig(core, adjW).withColumnRenamed("node", "w")),
           Seq("w"), "left_semi")
         .groupBy(col("x")).agg(count(lit(1)).as("sc")))
@@ -109,7 +108,7 @@ object IngestKCore {
           .join(sCredit, Seq("x"), "left").join(xCredit, Seq("x"), "left")
           .select(col("x").as("node"),
             (coalesce(col("sc"), lit(0L)) + coalesce(col("xc"), lit(0L))).as("c"))
-        val next = mat(credit.where(col("c") >= k).select(col("node")))
+        val next = Materialize(credit.where(col("c") >= k).select(col("node")))
         val nextCount = next.count()
         stable = nextCount == liveCount
         liveCount = nextCount
@@ -129,10 +128,9 @@ object IngestKCore {
       post: DataFrame,
       core: DataFrame,
       delEndpoints: DataFrame,
-      k: Int,
-      mat: DataFrame => DataFrame): DataFrame = {
-    var removed = mat(delEndpoints.where(lit(false)))
-    var frontier = mat(interBig(core, delEndpoints))
+      k: Int): DataFrame = {
+    var removed = Materialize(delEndpoints.where(lit(false)))
+    var frontier = Materialize(interBig(core, delEndpoints))
     while (!frontier.isEmpty) {
       val adjF = adjOf(post, frontier)
       val adjW = adjF.select(col("w").as("node")).distinct()
@@ -141,14 +139,15 @@ object IngestKCore {
       val degs = adjF
         .join(broadcast(memberW.withColumnRenamed("node", "w")), Seq("w"), "left_semi")
         .groupBy(col("x")).agg(count(lit(1)).as("d"))
-      val drop = mat(frontier.withColumnRenamed("node", "x")
+      val drop = Materialize(frontier.withColumnRenamed("node", "x")
         .join(degs, Seq("x"), "left")
         .where(coalesce(col("d"), lit(0L)) < k)
         .select(col("x").as("node")))
-      if (drop.isEmpty) frontier = mat(drop)
+      if (drop.isEmpty) frontier = Materialize(drop)
       else {
-        removed = mat(removed.unionByName(drop))
-        frontier = mat(interBig(core, adjOf(post, drop).select(col("w").as("node")).distinct())
+        removed = Materialize(removed.unionByName(drop))
+        frontier = Materialize(
+          interBig(core, adjOf(post, drop).select(col("w").as("node")).distinct())
           .join(broadcast(removed), Seq("node"), "left_anti"))
       }
     }
@@ -201,61 +200,51 @@ final class IngestKCore(
 ) extends ((DataFrame, Long) => Unit) with Serializable {
   require(k >= 1, s"k must be >= 1, got $k")
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(coreTable),
       s"IngestKCore: '$edgeTable' and '$coreTable' must be initialized first")
-    val canon = batch
+    val canon = Materialize.persist(batch
       .select(least(col("u"), col("v")).cast("long").as("u"),
         greatest(col("u"), col("v")).cast("long").as("v"))
-      .where(col("u") =!= col("v")).distinct().persist()
-    var newEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = canon.join(old, Seq("u", "v"), "left_anti").persist()
-      if (newEdges.isEmpty) return
+      .where(col("u") =!= col("v")).distinct())
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(canon.join(old, Seq("u", "v"), "left_anti"))
+    if (newEdges.isEmpty) return
 
-      spark.sql(s"REFRESH TABLE $coreTable")
-      val prev = spark.table(coreTable)
-      val core = prev.select(col("node"))
-      val post = old.unionByName(newEdges)
-      val endpoints = newEdges.select(col("u").as("node"))
-        .unionByName(newEdges.select(col("v").as("node"))).distinct()
+    spark.sql(s"REFRESH TABLE $coreTable")
+    val prev = spark.table(coreTable)
+    val core = prev.select(col("node"))
+    val post = old.unionByName(newEdges)
+    val endpoints = newEdges.select(col("u").as("node"))
+      .unionByName(newEdges.select(col("v").as("node"))).distinct()
 
-      val promoted = IngestKCore.promoted(post, core, endpoints, k, maxRounds, mat)
+    val promoted = IngestKCore.promoted(post, core, endpoints, k, maxRounds)
 
-      val member = core.unionByName(promoted)
-      val inCoreEndpoints = IngestKCore.interBig(member, endpoints)
-      val coreNbrsOfPromoted =
-        if (promoted.isEmpty) promoted
-        else {
-          val adjP = mat(IngestKCore.adjOf(post, promoted)
-            .select(col("w").as("node")).distinct())
-          IngestKCore.interBig(core, adjP)
-        }
-      val touched = mat(promoted.unionByName(inCoreEndpoints)
-        .unionByName(coreNbrsOfPromoted).distinct())
-      if (!touched.isEmpty) {
-        val degs = IngestKCore.touchedDegs(post, member, touched)
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, coreTable, prev, degs, touched,
-          Seq("node"), "node", buckets)
+    val member = core.unionByName(promoted)
+    val inCoreEndpoints = IngestKCore.interBig(member, endpoints)
+    val coreNbrsOfPromoted =
+      if (promoted.isEmpty) promoted
+      else {
+        val adjP = Materialize(IngestKCore.adjOf(post, promoted)
+          .select(col("w").as("node")).distinct())
+        IngestKCore.interBig(core, adjP)
       }
-
-      // idempotent append AFTER the view update (view-first discipline)
-      val full = spark.table(edgeTable)
-      newEdges.select(full.columns.map(col).toIndexedSeq: _*)
-        .write.mode(SaveMode.Append).format("parquet").insertInto(edgeTable)
-      spark.sql(s"REFRESH TABLE $edgeTable")
-    } finally {
-      canon.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+    val touched = Materialize(promoted.unionByName(inCoreEndpoints)
+      .unionByName(coreNbrsOfPromoted).distinct())
+    if (!touched.isEmpty) {
+      val degs = IngestKCore.touchedDegs(post, member, touched)
+      IvmMaintenance.rebuildTouchedBuckets(
+        spark, coreTable, prev, degs, touched,
+        Seq("node"), "node", buckets)
     }
+
+    // idempotent append AFTER the view update (view-first discipline)
+    val full = spark.table(edgeTable)
+    newEdges.select(full.columns.map(col).toIndexedSeq: _*)
+      .write.mode(SaveMode.Append).format("parquet").insertInto(edgeTable)
+    spark.sql(s"REFRESH TABLE $edgeTable")
   }
 }
 
@@ -295,73 +284,61 @@ final class IngestKCoreCdc(
 ) extends ((DataFrame, Long) => Unit) with Serializable {
   require(k >= 1, s"k must be >= 1, got $k")
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(coreTable),
       s"IngestKCoreCdc: '$edgeTable' and '$coreTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestKCoreCdc", batch)
-    val ins = ins0.select(col("u"), col("v")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      spark.sql(s"REFRESH TABLE $coreTable")
-      val prev = spark.table(coreTable)
-      val core = prev.select(col("node"))
-      val afterDel = old.join(delEdges, Seq("u", "v"), "left_anti")
-      val post = afterDel.unionByName(newEdges)
+    spark.sql(s"REFRESH TABLE $coreTable")
+    val prev = spark.table(coreTable)
+    val core = prev.select(col("node"))
+    val afterDel = old.join(delEdges, Seq("u", "v"), "left_anti")
+    val post = afterDel.unionByName(newEdges)
 
-      // phase 1: demotion on E \ del
-      val delEndpoints = delEdges.select(col("u").as("node"))
-        .unionByName(delEdges.select(col("v").as("node"))).distinct()
-      val removed = IngestKCore.demoted(afterDel, core, delEndpoints, k, mat)
-      val core1 = core.join(broadcast(removed), Seq("node"), "left_anti")
+    // phase 1: demotion on E \ del
+    val delEndpoints = delEdges.select(col("u").as("node"))
+      .unionByName(delEdges.select(col("v").as("node"))).distinct()
+    val removed = IngestKCore.demoted(afterDel, core, delEndpoints, k)
+    val core1 = core.join(broadcast(removed), Seq("node"), "left_anti")
 
-      // phase 2: promotion on (E \ del) ∪ ins against the shrunk core
-      val insEndpoints = newEdges.select(col("u").as("node"))
-        .unionByName(newEdges.select(col("v").as("node"))).distinct()
-      val promoted = IngestKCore.promoted(post, core1, insEndpoints, k, maxRounds, mat)
+    // phase 2: promotion on (E \ del) ∪ ins against the shrunk core
+    val insEndpoints = newEdges.select(col("u").as("node"))
+      .unionByName(newEdges.select(col("v").as("node"))).distinct()
+    val promoted = IngestKCore.promoted(post, core1, insEndpoints, k, maxRounds)
 
-      val member = core1.unionByName(promoted)
-      val changedEndpoints = insEndpoints.unionByName(delEndpoints).distinct()
-      val inCoreEndpoints = IngestKCore.interBig(member, changedEndpoints)
-      def coreNbrsOf(nodes: DataFrame): DataFrame =
-        if (nodes.isEmpty) nodes
-        else IngestKCore.interBig(member,
-          mat(IngestKCore.adjOf(post, nodes).select(col("w").as("node")).distinct()))
-      val touched = mat(promoted.unionByName(inCoreEndpoints)
-        .unionByName(coreNbrsOf(promoted)).unionByName(coreNbrsOf(removed)).distinct())
-      if (!touched.isEmpty || !removed.isEmpty) {
-        // both delta-sized; materializing severs the deeply-shared
-        // union/anti-join lineage (core1/member/promoted/removed all
-        // reference the same scans), which Catalyst's Union constraint
-        // rewrite otherwise chokes on (key-not-found on a child attr)
-        val degs = mat(IngestKCore.touchedDegs(post, member, touched))
-        val dropIds = mat(touched.unionByName(removed).distinct())
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, coreTable, prev, degs, dropIds,
-          Seq("node"), "node", buckets)
-      }
-
+    val member = core1.unionByName(promoted)
+    val changedEndpoints = insEndpoints.unionByName(delEndpoints).distinct()
+    val inCoreEndpoints = IngestKCore.interBig(member, changedEndpoints)
+    def coreNbrsOf(nodes: DataFrame): DataFrame =
+      if (nodes.isEmpty) nodes
+      else IngestKCore.interBig(member,
+        Materialize(IngestKCore.adjOf(post, nodes).select(col("w").as("node")).distinct()))
+    val touched = Materialize(promoted.unionByName(inCoreEndpoints)
+      .unionByName(coreNbrsOf(promoted)).unionByName(coreNbrsOf(removed)).distinct())
+    if (!touched.isEmpty || !removed.isEmpty) {
+      // both delta-sized; materializing severs the deeply-shared
+      // union/anti-join lineage (core1/member/promoted/removed all
+      // reference the same scans), which Catalyst's Union constraint
+      // rewrite otherwise chokes on (key-not-found on a child attr)
+      val degs = Materialize(IngestKCore.touchedDegs(post, member, touched))
+      val dropIds = Materialize(touched.unionByName(removed).distinct())
       IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+        spark, coreTable, prev, degs, dropIds,
+        Seq("node"), "node", buckets)
     }
+
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

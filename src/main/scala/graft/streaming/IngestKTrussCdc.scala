@@ -54,157 +54,145 @@ final class IngestKTrussCdc(
 
   import IngestKTrussCdc._
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(trussTable),
       s"IngestKTrussCdc: '$edgeTable' and '$trussTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestKTrussCdc", batch)
-    val ins = ins0.select(col("u"), col("v")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
-      spark.sql(s"REFRESH TABLE $trussTable")
-      val prev = spark.table(trussTable)
-      val preTruss = prev.select(col("lo").as("u"), col("hi").as("v"))
+    val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
+    spark.sql(s"REFRESH TABLE $trussTable")
+    val prev = spark.table(trussTable)
+    val preTruss = prev.select(col("lo").as("u"), col("hi").as("v"))
 
-      // ---- demotion on E ∖ del ----
-      val deletedTruss = mat(
-        preTruss.join(broadcast(delEdges), Seq("u", "v"), "left_semi"))
-      var removedAll = deletedTruss
-      if (!deletedTruss.isEmpty) {
-        var frontier = mat(partners(triRows(deletedTruss, preTruss))
-          .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
-        while (!frontier.isEmpty) {
-          val live = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
-          val sup = triRows(frontier, live)
-            .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
-          val drop = mat(frontier.join(sup, Seq("u", "v"), "left")
-            .where(coalesce(col("s"), lit(0L)) < minSup)
-            .select(col("u"), col("v")))
-          if (drop.isEmpty) frontier = mat(drop)
-          else {
-            val loseFrom = mat(partners(triRows(drop, live)))
-            removedAll = mat(removedAll.unionByName(drop))
-            frontier = mat(loseFrom.join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
-          }
-        }
-      }
-      val truss1 = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
-
-      // ---- promotion on (E ∖ del) ∪ ins against the shrunk truss ----
-      def fullSupOk(cands: DataFrame): DataFrame =
-        if (cands.isEmpty) cands
-        else triRows(cands, post)
+    // ---- demotion on E ∖ del ----
+    val deletedTruss = Materialize(
+      preTruss.join(broadcast(delEdges), Seq("u", "v"), "left_semi"))
+    var removedAll = deletedTruss
+    if (!deletedTruss.isEmpty) {
+      var frontier = Materialize(partners(triRows(deletedTruss, preTruss))
+        .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
+      while (!frontier.isEmpty) {
+        val live = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
+        val sup = triRows(frontier, live)
           .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
-          .where(col("s") >= minSup).select(col("u"), col("v"))
-      def nonTruss1(pairs0: DataFrame): DataFrame =
-        pairs0.join(broadcast(
-          truss1.join(broadcast(pairs0), Seq("u", "v"), "left_semi")),
-          Seq("u", "v"), "left_anti")
-      // every step is materialized: stacking wedge join → partner
-      // derivation → membership anti-join → wedge join again in ONE
-      // pipeline livelocks local[32] (32 concurrent tasks × one 64 MB
-      // hash page per stacked aggregate exhausts executor memory and the
-      // allocator retries forever) — and each mat also stops the
-      // broadcast subtrees from re-evaluating the previous wedge join
-      val seedPartners = mat(partners(triRows(newEdges, post)))
-      val seedCand = mat(newEdges.unionByName(nonTruss1(seedPartners)).distinct())
-      var x = mat(fullSupOk(seedCand))
-      var frontier2 = x
-      var round = 0
-      while (!frontier2.isEmpty) {
-        round += 1
-        if (round > maxRounds) throw new IllegalStateException(
-          s"IngestKTrussCdc: candidate expansion exceeded $maxRounds rounds; " +
-            s"raise maxRounds or recompute from scratch")
-        val p = mat(partners(triRows(frontier2, post)))
-        val cand = mat(nonTruss1(p).join(broadcast(x), Seq("u", "v"), "left_anti"))
-        frontier2 = mat(fullSupOk(cand))
-        x = mat(x.unionByName(frontier2))
-      }
-      val promoted: DataFrame =
-        if (x.isEmpty) x
+        val drop = Materialize(frontier.join(sup, Seq("u", "v"), "left")
+          .where(coalesce(col("s"), lit(0L)) < minSup)
+          .select(col("u"), col("v")))
+        if (drop.isEmpty) frontier = Materialize(drop)
         else {
-          // candidate triangles ONCE, partner-membership vs the STATIC
-          // intermediate truss precomputed as flags; only the live-set
-          // membership re-joins per round
-          val triX0 = mat(triRows(x, post)
-            .select(col("ku"), col("kv"),
-              least(col("e"), col("w")).as("au"), greatest(col("e"), col("w")).as("av"),
-              least(col("o"), col("w")).as("bu"), greatest(col("o"), col("w")).as("bv")))
-          val inT1 = (cu: String, cv: String, flag: String) => (df: DataFrame) => {
-            val pairs0 = df.select(col(cu).as("u"), col(cv).as("v")).distinct()
-            val hit = truss1.join(broadcast(pairs0), Seq("u", "v"), "left_semi")
-              .select(col("u").as(cu), col("v").as(cv)).withColumn(flag, lit(true))
-            df.join(broadcast(hit), Seq(cu, cv), "left")
-              .withColumn(flag, coalesce(col(flag), lit(false)))
-          }
-          val triX = mat(inT1("au", "av", "t1")(inT1("bu", "bv", "t2")(triX0)))
-          var live = x
-          var liveCount = live.count()
-          var stable = false
-          while (!stable) {
-            val m1 = broadcast(live.select(col("u").as("au"), col("v").as("av"))
-              .withColumn("m1", lit(true)))
-            val m2 = broadcast(live.select(col("u").as("bu"), col("v").as("bv"))
-              .withColumn("m2", lit(true)))
-            val sup = triX.join(m1, Seq("au", "av"), "left").join(m2, Seq("bu", "bv"), "left")
-              .where((col("t1") || coalesce(col("m1"), lit(false))) &&
-                (col("t2") || coalesce(col("m2"), lit(false))))
-              .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
-            val next = mat(live.join(sup.where(col("s") >= minSup),
-              Seq("u", "v"), "left_semi"))
-            val nextCount = next.count()
-            stable = nextCount == liveCount
-            liveCount = nextCount
-            live = next
-          }
-          live
+          val loseFrom = Materialize(partners(triRows(drop, live)))
+          removedAll = Materialize(removedAll.unionByName(drop))
+          frontier = Materialize(loseFrom.join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
         }
+      }
+    }
+    val truss1 = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
 
-      // ---- touched-support recompute over the FINAL truss ----
-      val finalTruss = truss1.unionByName(promoted)
-      val gainedPartners =
-        if (promoted.isEmpty) promoted
-        else mat(partners(triRows(promoted, finalTruss)))
-      val lostPartners =
-        if (removedAll.isEmpty) removedAll
-        else mat(partners(triRows(removedAll, preTruss))
-          .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
-      val touched = mat(promoted.unionByName(gainedPartners)
-        .unionByName(lostPartners).distinct())
-      if (!touched.isEmpty || !removedAll.isEmpty) {
-        val supports = mat(triRows(touched, finalTruss)
-          .groupBy(col("ku").as("lo"), col("kv").as("hi")).agg(count(lit(1)).as("support")))
-        val dropIds = mat(removedAll.unionByName(touched).distinct()
-          .select(col("u").as("lo"), col("v").as("hi")))
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, trussTable, prev, supports, dropIds,
-          Seq("lo", "hi"), "lo", buckets)
+    // ---- promotion on (E ∖ del) ∪ ins against the shrunk truss ----
+    def fullSupOk(cands: DataFrame): DataFrame =
+      if (cands.isEmpty) cands
+      else triRows(cands, post)
+        .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
+        .where(col("s") >= minSup).select(col("u"), col("v"))
+    def nonTruss1(pairs0: DataFrame): DataFrame =
+      pairs0.join(broadcast(
+        truss1.join(broadcast(pairs0), Seq("u", "v"), "left_semi")),
+        Seq("u", "v"), "left_anti")
+    // every step is materialized: stacking wedge join → partner
+    // derivation → membership anti-join → wedge join again in ONE
+    // pipeline livelocks local[32] (32 concurrent tasks × one 64 MB
+    // hash page per stacked aggregate exhausts executor memory and the
+    // allocator retries forever) — and each checkpoint also stops the
+    // broadcast subtrees from re-evaluating the previous wedge join
+    val seedPartners = Materialize(partners(triRows(newEdges, post)))
+    val seedCand = Materialize(newEdges.unionByName(nonTruss1(seedPartners)).distinct())
+    var x = Materialize(fullSupOk(seedCand))
+    var frontier2 = x
+    var round = 0
+    while (!frontier2.isEmpty) {
+      round += 1
+      if (round > maxRounds) throw new IllegalStateException(
+        s"IngestKTrussCdc: candidate expansion exceeded $maxRounds rounds; " +
+          s"raise maxRounds or recompute from scratch")
+      val p = Materialize(partners(triRows(frontier2, post)))
+      val cand = Materialize(nonTruss1(p).join(broadcast(x), Seq("u", "v"), "left_anti"))
+      frontier2 = Materialize(fullSupOk(cand))
+      x = Materialize(x.unionByName(frontier2))
+    }
+    val promoted: DataFrame =
+      if (x.isEmpty) x
+      else {
+        // candidate triangles ONCE, partner-membership vs the STATIC
+        // intermediate truss precomputed as flags; only the live-set
+        // membership re-joins per round
+        val triX0 = Materialize(triRows(x, post)
+          .select(col("ku"), col("kv"),
+            least(col("e"), col("w")).as("au"), greatest(col("e"), col("w")).as("av"),
+            least(col("o"), col("w")).as("bu"), greatest(col("o"), col("w")).as("bv")))
+        val inT1 = (cu: String, cv: String, flag: String) => (df: DataFrame) => {
+          val pairs0 = df.select(col(cu).as("u"), col(cv).as("v")).distinct()
+          val hit = truss1.join(broadcast(pairs0), Seq("u", "v"), "left_semi")
+            .select(col("u").as(cu), col("v").as(cv)).withColumn(flag, lit(true))
+          df.join(broadcast(hit), Seq(cu, cv), "left")
+            .withColumn(flag, coalesce(col(flag), lit(false)))
+        }
+        val triX = Materialize(inT1("au", "av", "t1")(inT1("bu", "bv", "t2")(triX0)))
+        var live = x
+        var liveCount = live.count()
+        var stable = false
+        while (!stable) {
+          val m1 = broadcast(live.select(col("u").as("au"), col("v").as("av"))
+            .withColumn("m1", lit(true)))
+          val m2 = broadcast(live.select(col("u").as("bu"), col("v").as("bv"))
+            .withColumn("m2", lit(true)))
+          val sup = triX.join(m1, Seq("au", "av"), "left").join(m2, Seq("bu", "bv"), "left")
+            .where((col("t1") || coalesce(col("m1"), lit(false))) &&
+              (col("t2") || coalesce(col("m2"), lit(false))))
+            .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
+          val next = Materialize(live.join(sup.where(col("s") >= minSup),
+            Seq("u", "v"), "left_semi"))
+          val nextCount = next.count()
+          stable = nextCount == liveCount
+          liveCount = nextCount
+          live = next
+        }
+        live
       }
 
+    // ---- touched-support recompute over the FINAL truss ----
+    val finalTruss = truss1.unionByName(promoted)
+    val gainedPartners =
+      if (promoted.isEmpty) promoted
+      else Materialize(partners(triRows(promoted, finalTruss)))
+    val lostPartners =
+      if (removedAll.isEmpty) removedAll
+      else Materialize(partners(triRows(removedAll, preTruss))
+        .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
+    val touched = Materialize(promoted.unionByName(gainedPartners)
+      .unionByName(lostPartners).distinct())
+    if (!touched.isEmpty || !removedAll.isEmpty) {
+      val supports = Materialize(triRows(touched, finalTruss)
+        .groupBy(col("ku").as("lo"), col("kv").as("hi")).agg(count(lit(1)).as("support")))
+      val dropIds = Materialize(removedAll.unionByName(touched).distinct()
+        .select(col("u").as("lo"), col("v").as("hi")))
       IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+        spark, trussTable, prev, supports, dropIds,
+        Seq("lo", "hi"), "lo", buckets)
     }
+
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }
 

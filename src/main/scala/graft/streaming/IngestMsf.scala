@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -37,22 +38,20 @@ final class IngestMsf(
     forestTable: String
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(forestTable),
       s"IngestMsf: '$forestTable' must be initialized before the stream starts")
-    val edges = batch.select(col("u"), col("v"), col("w")).persist()
-    try {
-      spark.sql(s"REFRESH TABLE $forestTable")
-      val prev = spark.table(forestTable)
-      val forest = graft.graphs.Graphs.minimumSpanningForest(
-        prev.unionByName(edges), col("u"), col("v"), col("w"))
-      val staging = s"${forestTable}__staging"
-      forest.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
-      spark.sql(s"REFRESH TABLE $staging")
-      spark.table(staging)
-        .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(forestTable)
-      spark.sql(s"REFRESH TABLE $forestTable")
-    } finally edges.unpersist()
+    val edges = Materialize.persist(batch.select(col("u"), col("v"), col("w")))
+    spark.sql(s"REFRESH TABLE $forestTable")
+    val prev = spark.table(forestTable)
+    val forest = graft.graphs.Graphs.minimumSpanningForest(
+      prev.unionByName(edges), col("u"), col("v"), col("w"))
+    val staging = s"${forestTable}__staging"
+    forest.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
+    spark.sql(s"REFRESH TABLE $staging")
+    spark.table(staging)
+      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(forestTable)
+    spark.sql(s"REFRESH TABLE $forestTable")
   }
 }

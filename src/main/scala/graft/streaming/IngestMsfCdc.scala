@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,67 +64,56 @@ final class IngestMsfCdc(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(forestTable) &&
       spark.catalog.tableExists(labelsTable),
       s"IngestMsfCdc: '$edgeTable', '$forestTable' and '$labelsTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestMsfCdc", batch,
       payload = _.groupBy(col("u"), col("v")).agg(min(col("w").cast("long")).as("w")))
-    val ins = ins0.select(col("u"), col("v"), col("w")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    var touchNodes: DataFrame = null
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"), col("w"))
-      // net inserts: absent pairs enter; present pairs REPLACE iff cheaper
-      newEdges = ins
-        .join(old.select(col("u"), col("v"), col("w").as("__old_w")), Seq("u", "v"), "left")
-        .where(col("__old_w").isNull || col("w") < col("__old_w"))
-        .select(col("u"), col("v"), col("w")).persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v"), col("w")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"), col("w"))
+    // net inserts: absent pairs enter; present pairs REPLACE iff cheaper
+    val newEdges = Materialize.persist(ins
+      .join(old.select(col("u"), col("v"), col("w").as("__old_w")), Seq("u", "v"), "left")
+      .where(col("__old_w").isNull || col("w") < col("__old_w"))
+      .select(col("u"), col("v"), col("w")))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val postEdges = old
-        .join(delEdges, Seq("u", "v"), "left_anti")
-        .join(newEdges.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
-        .unionByName(newEdges)
-      val (tn, subEdges) = IngestComponentsCdc.affectedSubgraph(
-        spark, labelsTable, postEdges, newEdges.select(col("u"), col("v")), delEdges)
-      touchNodes = tn
-      val localForest = graft.graphs.Graphs.minimumSpanningForest(
-        subEdges, col("u"), col("v"), col("w"))
+    val postEdges = old
+      .join(delEdges, Seq("u", "v"), "left_anti")
+      .join(newEdges.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
+      .unionByName(newEdges)
+    val (touchNodes, subEdges) = IngestComponentsCdc.affectedSubgraph(
+      spark, labelsTable, postEdges, newEdges.select(col("u"), col("v")), delEdges)
+    val localForest = graft.graphs.Graphs.minimumSpanningForest(
+      subEdges, col("u"), col("v"), col("w"))
 
-      // labels over the local forest's edges — same components, nodes − c rows
-      val cc = graft.graphs.Graphs.connectedComponents(localForest, col("u"), col("v"))
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, labelsTable, spark.table(labelsTable), cc, touchNodes,
-        Seq("node"), "component", buckets)
+    // labels over the local forest's edges — same components, nodes − c rows
+    val cc = graft.graphs.Graphs.connectedComponents(localForest, col("u"), col("v"))
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, labelsTable, spark.table(labelsTable), cc, touchNodes,
+      Seq("node"), "component", buckets)
 
-      // forest splice: drop the affected components' forest rows (u-side
-      // semi-join on the touched nodes — forest edges live within
-      // components), insert the re-solved local forest
-      spark.sql(s"REFRESH TABLE $forestTable")
-      val forest = spark.table(forestTable)
-      val drops = forest
-        .join(broadcast(touchNodes.select(col("node").as("u"))), Seq("u"), "left_semi")
-        .select(col("u"), col("v"))
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, forestTable, forest, localForest, drops,
-        Seq("u", "v"), "u", buckets)
+    // forest splice: drop the affected components' forest rows (u-side
+    // semi-join on the touched nodes — forest edges live within
+    // components), insert the re-solved local forest
+    spark.sql(s"REFRESH TABLE $forestTable")
+    val forest = spark.table(forestTable)
+    val drops = forest
+      .join(broadcast(touchNodes.select(col("node").as("u"))), Seq("u"), "left_semi")
+      .select(col("u"), col("v"))
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, forestTable, forest, localForest, drops,
+      Seq("u", "v"), "u", buckets)
 
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      if (touchNodes != null) { touchNodes.unpersist(); () }
-    }
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

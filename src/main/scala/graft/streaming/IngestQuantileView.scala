@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.sources.Storage
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,43 +76,41 @@ final class IngestQuantileView(
     weight: Option[String] = None
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(baseTable) && spark.catalog.tableExists(cellTable),
       s"IngestQuantileView: '$baseTable' and '$cellTable' must be initialized first")
 
-    val changes = batch.persist()
-    try {
-      val payload = Seq("row_id", "grp", "value") ++ weight
-      val inserts = changes.where(col("op") === "insert")
-        .select(payload.map(col): _*)
-      val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
-      spark.sql(s"REFRESH TABLE $baseTable")
-      val base = spark.table(baseTable)
+    val changes = Materialize.persist(batch)
+    val payload = Seq("row_id", "grp", "value") ++ weight
+    val inserts = changes.where(col("op") === "insert")
+      .select(payload.map(col): _*)
+    val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
+    spark.sql(s"REFRESH TABLE $baseTable")
+    val base = spark.table(baseTable)
 
-      spark.sql(s"REFRESH TABLE $cellTable")
-      val cells = spark.table(cellTable)
-      if (batchId > IvmMaintenance.lastApplied(cells)) {
-        IvmMaintenance.assertUniqueInsertIds("IngestQuantileView", inserts, "row_id",
-          "cell refcounts would double-count while the base keeps one row")
-        IvmMaintenance.assertNoLiveIdReuse("IngestQuantileView", base, inserts,
-          deleteIds, "row_id",
-          "refcount arithmetic has no replace semantics")
-        val liveCells = cells.where(col("rc").isNotNull).drop("__batch")
-        val basePayload = base.select(payload.map(col): _*)
-        val merged = (weight match {
-          case Some(w) => Storage.mergeWeightedQuantileCellsDelta(
-            liveCells, basePayload, inserts, deleteIds, "row_id", "grp", "value", w, scale)
-          case None => Storage.mergeQuantileCellsDelta(
-            liveCells, basePayload, inserts, deleteIds, "row_id", "grp", "value", scale)
-        }).withColumn("__batch", lit(batchId))
-        IvmMaintenance.swapViewWithSentinel(spark, cellTable, merged, batchId)
-      }
+    spark.sql(s"REFRESH TABLE $cellTable")
+    val cells = spark.table(cellTable)
+    if (batchId > IvmMaintenance.lastApplied(cells)) {
+      IvmMaintenance.assertUniqueInsertIds("IngestQuantileView", inserts, "row_id",
+        "cell refcounts would double-count while the base keeps one row")
+      IvmMaintenance.assertNoLiveIdReuse("IngestQuantileView", base, inserts,
+        deleteIds, "row_id",
+        "refcount arithmetic has no replace semantics")
+      val liveCells = cells.where(col("rc").isNotNull).drop("__batch")
+      val basePayload = base.select(payload.map(col): _*)
+      val merged = (weight match {
+        case Some(w) => Storage.mergeWeightedQuantileCellsDelta(
+          liveCells, basePayload, inserts, deleteIds, "row_id", "grp", "value", w, scale)
+        case None => Storage.mergeQuantileCellsDelta(
+          liveCells, basePayload, inserts, deleteIds, "row_id", "grp", "value", scale)
+      }).withColumn("__batch", lit(batchId))
+      IvmMaintenance.swapViewWithSentinel(spark, cellTable, merged, batchId)
+    }
 
-      // base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
-      // piece 4 — the GROUP is the bucket key)
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
-    } finally changes.unpersist()
+    // base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
+    // piece 4 — the GROUP is the bucket key)
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
   }
 }

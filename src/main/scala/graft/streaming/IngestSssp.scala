@@ -94,7 +94,7 @@ final class IngestSsspCdc(
 ) extends ((DataFrame, Long) => Unit) with Serializable {
   require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(distTable),
       s"IngestSsspCdc: '$edgeTable' and '$distTable' must be initialized first")
@@ -102,111 +102,99 @@ final class IngestSsspCdc(
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         col("w").cast("long").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val ins = canon(batch.where(col("op") === "insert").drop("op"))
+    val ins = Materialize.persist(canon(batch.where(col("op") === "insert").drop("op"))
       .where(col("w").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")).persist()
-    val del = canon(batch.where(col("op") === "delete").drop("op"))
-      .select(col("src"), col("dst")).distinct().persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      if (!ins.join(del, Seq("src", "dst"), "left_semi").isEmpty) throw new IllegalStateException(
-        "IngestSsspCdc: a batch inserts AND deletes the same edge — order within " +
-          "a batch is undefined (unordered-set contract); split the operations across batches")
-      val negW = ins.where(col("w") < 0).limit(1).collect()
-      if (negW.nonEmpty) throw new IllegalStateException(
-        s"IngestSsspCdc: batch carries a negative weight ${negW.head.mkString("(", ",", ")")} — " +
-          "the hop-resolved state's serve is only exact for w >= 0")
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+    val del = Materialize.persist(canon(batch.where(col("op") === "delete").drop("op"))
+      .select(col("src"), col("dst")).distinct())
+    if (!ins.join(del, Seq("src", "dst"), "left_semi").isEmpty) throw new IllegalStateException(
+      "IngestSsspCdc: a batch inserts AND deletes the same edge — order within " +
+        "a batch is undefined (unordered-set contract); split the operations across batches")
+    val negW = ins.where(col("w") < 0).limit(1).collect()
+    if (negW.nonEmpty) throw new IllegalStateException(
+      s"IngestSsspCdc: batch carries a negative weight ${negW.head.mkString("(", ",", ")")} — " +
+        "the hop-resolved state's serve is only exact for w >= 0")
 
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("src"), col("dst"), col("w"))
-      // net changes: upserts that actually change a weight (or are new),
-      // deletes of pairs actually present — redelivery nets to empty
-      newEdges = ins
-        .join(old.select(col("src"), col("dst"), col("w").as("__old_w")),
-          Seq("src", "dst"), "left")
-        .where(col("__old_w").isNull || col("w") =!= col("__old_w"))
-        .select(col("src"), col("dst"), col("w")).persist()
-      delEdges = del.join(old, Seq("src", "dst"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("src"), col("dst"), col("w"))
+    // net changes: upserts that actually change a weight (or are new),
+    // deletes of pairs actually present — redelivery nets to empty
+    val newEdges = Materialize.persist(ins
+      .join(old.select(col("src"), col("dst"), col("w").as("__old_w")),
+        Seq("src", "dst"), "left")
+      .where(col("__old_w").isNull || col("w") =!= col("__old_w"))
+      .select(col("src"), col("dst"), col("w")))
+    val delEdges = Materialize.persist(del.join(old, Seq("src", "dst"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val changedPairs = newEdges.select(col("src"), col("dst"))
-        .unionByName(delEdges)
-      val post = old.join(changedPairs, Seq("src", "dst"), "left_anti")
-        .unionByName(newEdges)
-      spark.sql(s"REFRESH TABLE $distTable")
-      val state = spark.table(distTable)
+    val changedPairs = newEdges.select(col("src"), col("dst"))
+      .unionByName(delEdges)
+    val post = old.join(changedPairs, Seq("src", "dst"), "left_anti")
+      .unionByName(newEdges)
+    spark.sql(s"REFRESH TABLE $distTable")
+    val state = spark.table(distTable)
 
-      val allUpserts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val allRemoved = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val emptyVals = mat(state.select(col("node"), col("dist")).where(lit(false)))
-      val emptyNodes = mat(state.select(col("node")).where(lit(false)))
-      // the changed-edge targets re-candidate at EVERY level: a changed
-      // in-edge (u, v) moves m_h(v) for each h where u carries m_{h−1}
-      val candEdge = mat(changedPairs.select(col("dst").as("node")).distinct())
-      var chVals: DataFrame = emptyVals  // m_{h−1} values that changed
-      var rmNodes: DataFrame = emptyNodes // m_{h−1} rows that vanished
-      for (h <- 1 to maxHops) {
-        val stored = state.where(col("h") === (h - 1)).select(col("node"), col("dist"))
-        val prevEff =
-          if (chVals.isEmpty && rmNodes.isEmpty) stored
-          else stored.join(broadcast(chVals.select(col("node")).unionByName(rmNodes)),
-              Seq("node"), "left_anti")
-            .unionByName(chVals)
-        val candProp =
-          if (chVals.isEmpty && rmNodes.isEmpty) emptyNodes
-          else post.join(broadcast(chVals.select(col("node").as("src"))
-              .unionByName(rmNodes.withColumnRenamed("node", "src"))),
-              Seq("src"), "left_semi")
-            .select(col("dst").as("node"))
-        val cands = mat(candEdge.unionByName(candProp).distinct())
-        if (cands.isEmpty) { chVals = emptyVals; rmNodes = emptyNodes }
-        else {
-          // absolute recompute: min over ALL surviving in-edges of m_{h−1}+w
-          val inEdges = post
-            .join(broadcast(cands.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
-          val recomputed = mat(inEdges
-            .join(prevEff.select(col("node").as("src"), col("dist").as("__pd")), Seq("src"))
-            .groupBy(col("dst").as("node")).agg(min(col("__pd") + col("w")).as("dist")))
-          val storedH = mat(state.where(col("h") === h)
-            .select(col("node"), col("dist").as("__sd"))
-            .join(broadcast(cands), Seq("node"), "left_semi"))
-          chVals = mat(recomputed
-            .join(storedH, Seq("node"), "left")
-            .where(col("__sd").isNull || col("dist") =!= col("__sd"))
-            .select(col("node"), col("dist")))
-          rmNodes = mat(storedH.select(col("node"))
-            .join(recomputed.select(col("node")), Seq("node"), "left_anti"))
-        }
-        if (!chVals.isEmpty) allUpserts += chVals.withColumn("h", lit(h))
-        if (!rmNodes.isEmpty) allRemoved += rmNodes.withColumn("h", lit(h))
+    val allUpserts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val allRemoved = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val emptyVals = Materialize(state.select(col("node"), col("dist")).where(lit(false)))
+    val emptyNodes = Materialize(state.select(col("node")).where(lit(false)))
+    // the changed-edge targets re-candidate at EVERY level: a changed
+    // in-edge (u, v) moves m_h(v) for each h where u carries m_{h−1}
+    val candEdge = Materialize(changedPairs.select(col("dst").as("node")).distinct())
+    var chVals: DataFrame = emptyVals  // m_{h−1} values that changed
+    var rmNodes: DataFrame = emptyNodes // m_{h−1} rows that vanished
+    for (h <- 1 to maxHops) {
+      val stored = state.where(col("h") === (h - 1)).select(col("node"), col("dist"))
+      val prevEff =
+        if (chVals.isEmpty && rmNodes.isEmpty) stored
+        else stored.join(broadcast(chVals.select(col("node")).unionByName(rmNodes)),
+            Seq("node"), "left_anti")
+          .unionByName(chVals)
+      val candProp =
+        if (chVals.isEmpty && rmNodes.isEmpty) emptyNodes
+        else post.join(broadcast(chVals.select(col("node").as("src"))
+            .unionByName(rmNodes.withColumnRenamed("node", "src"))),
+            Seq("src"), "left_semi")
+          .select(col("dst").as("node"))
+      val cands = Materialize(candEdge.unionByName(candProp).distinct())
+      if (cands.isEmpty) { chVals = emptyVals; rmNodes = emptyNodes }
+      else {
+        // absolute recompute: min over ALL surviving in-edges of m_{h−1}+w
+        val inEdges = post
+          .join(broadcast(cands.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
+        val recomputed = Materialize(inEdges
+          .join(prevEff.select(col("node").as("src"), col("dist").as("__pd")), Seq("src"))
+          .groupBy(col("dst").as("node")).agg(min(col("__pd") + col("w")).as("dist")))
+        val storedH = Materialize(state.where(col("h") === h)
+          .select(col("node"), col("dist").as("__sd"))
+          .join(broadcast(cands), Seq("node"), "left_semi"))
+        chVals = Materialize(recomputed
+          .join(storedH, Seq("node"), "left")
+          .where(col("__sd").isNull || col("dist") =!= col("__sd"))
+          .select(col("node"), col("dist")))
+        rmNodes = Materialize(storedH.select(col("node"))
+          .join(recomputed.select(col("node")), Seq("node"), "left_anti"))
       }
-
-      if (allUpserts.nonEmpty || allRemoved.nonEmpty) {
-        val emptyUpserts = state.select(col("node"), col("h"), col("dist")).where(lit(false))
-        val upserts = mat(allUpserts.foldLeft(emptyUpserts)(
-          (a, b) => a.unionByName(b.select(col("node"), col("h"), col("dist")))))
-        val removed = mat(allRemoved.foldLeft(state.select(col("node"), col("h"))
-          .where(lit(false)))((a, b) => a.unionByName(b.select(col("node"), col("h")))))
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, distTable, state, upserts, removed,
-          Seq("node", "h"), "node", buckets)
-      }
-
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges,
-        delEdges, Seq("src", "dst"), "src", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("src")).unionByName(delEdges.select(col("src")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+      if (!chVals.isEmpty) allUpserts += chVals.withColumn("h", lit(h))
+      if (!rmNodes.isEmpty) allRemoved += rmNodes.withColumn("h", lit(h))
     }
+
+    if (allUpserts.nonEmpty || allRemoved.nonEmpty) {
+      val emptyUpserts = state.select(col("node"), col("h"), col("dist")).where(lit(false))
+      val upserts = Materialize(allUpserts.foldLeft(emptyUpserts)(
+        (a, b) => a.unionByName(b.select(col("node"), col("h"), col("dist")))))
+      val removed = Materialize(allRemoved.foldLeft(state.select(col("node"), col("h"))
+        .where(lit(false)))((a, b) => a.unionByName(b.select(col("node"), col("h")))))
+      IvmMaintenance.rebuildTouchedBuckets(
+        spark, distTable, state, upserts, removed,
+        Seq("node", "h"), "node", buckets)
+    }
+
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges,
+      delEdges, Seq("src", "dst"), "src", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("src")).unionByName(delEdges.select(col("src")))))
   }
 }
 
@@ -218,96 +206,87 @@ final class IngestSssp(
 ) extends ((DataFrame, Long) => Unit) with Serializable {
   require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(distTable),
       s"IngestSssp: '$edgeTable' and '$distTable' must be initialized first")
-    val canon = batch
+    val canon = Materialize.persist(batch
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         col("w").cast("long").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst") && col("w").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")).persist()
-    var newEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      // the serve equivalence (min over exact-hop walk minima == hop-capped
-      // relaxation) requires non-negative weights; fail loudly rather than
-      // silently serving wrong distances (the parseCdcBatch discipline)
-      val negW = canon.where(col("w") < 0).limit(1).collect()
-      if (negW.nonEmpty) throw new IllegalStateException(
-        s"IngestSssp: batch carries a negative weight ${negW.head.mkString("(", ",", ")")} — " +
-          "the hop-resolved state's serve is only exact for w >= 0")
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("src"), col("dst"), col("w"))
-      newEdges = canon
-        .join(old.select(col("src"), col("dst"), col("w").as("__old_w")),
-          Seq("src", "dst"), "left")
-        .where(col("__old_w").isNull || col("w") < col("__old_w"))
-        .select(col("src"), col("dst"), col("w")).persist()
-      if (newEdges.isEmpty) return
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+    // the serve equivalence (min over exact-hop walk minima == hop-capped
+    // relaxation) requires non-negative weights; fail loudly rather than
+    // silently serving wrong distances (the parseCdcBatch discipline)
+    val negW = canon.where(col("w") < 0).limit(1).collect()
+    if (negW.nonEmpty) throw new IllegalStateException(
+      s"IngestSssp: batch carries a negative weight ${negW.head.mkString("(", ",", ")")} — " +
+        "the hop-resolved state's serve is only exact for w >= 0")
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("src"), col("dst"), col("w"))
+    val newEdges = Materialize.persist(canon
+      .join(old.select(col("src"), col("dst"), col("w").as("__old_w")),
+        Seq("src", "dst"), "left")
+      .where(col("__old_w").isNull || col("w") < col("__old_w"))
+      .select(col("src"), col("dst"), col("w")))
+    if (newEdges.isEmpty) return
 
-      val post = old
-        .join(newEdges.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
-        .unionByName(newEdges)
-      spark.sql(s"REFRESH TABLE $distTable")
-      val state = spark.table(distTable)
+    val post = old
+      .join(newEdges.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
+      .unionByName(newEdges)
+    spark.sql(s"REFRESH TABLE $distTable")
+    val state = spark.table(distTable)
 
-      val allChanged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var changedPrev: DataFrame = mat(state.select(col("node"), col("dist")).where(lit(false)))
-      for (h <- 1 to maxHops) {
-        val stored = state.where(col("h") === (h - 1)).select(col("node"), col("dist"))
-        val prevEff =
-          if (changedPrev.isEmpty) stored
-          else stored.join(broadcast(changedPrev.select(col("node"))), Seq("node"), "left_anti")
-            .unionByName(changedPrev)
-        // candidates: new-edge targets whose source is h−1 reachable, and
-        // out-edge targets of nodes whose m_{h−1} changed
-        val candNew = newEdges
-          .join(prevEff.select(col("node").as("src")), Seq("src"), "left_semi")
+    val allChanged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var changedPrev: DataFrame =
+      Materialize(state.select(col("node"), col("dist")).where(lit(false)))
+    for (h <- 1 to maxHops) {
+      val stored = state.where(col("h") === (h - 1)).select(col("node"), col("dist"))
+      val prevEff =
+        if (changedPrev.isEmpty) stored
+        else stored.join(broadcast(changedPrev.select(col("node"))), Seq("node"), "left_anti")
+          .unionByName(changedPrev)
+      // candidates: new-edge targets whose source is h−1 reachable, and
+      // out-edge targets of nodes whose m_{h−1} changed
+      val candNew = newEdges
+        .join(prevEff.select(col("node").as("src")), Seq("src"), "left_semi")
+        .select(col("dst").as("node"))
+      val candProp =
+        if (changedPrev.isEmpty) candNew.where(lit(false))
+        else post
+          .join(broadcast(changedPrev.select(col("node").as("src"))), Seq("src"), "left_semi")
           .select(col("dst").as("node"))
-        val candProp =
-          if (changedPrev.isEmpty) candNew.where(lit(false))
-          else post
-            .join(broadcast(changedPrev.select(col("node").as("src"))), Seq("src"), "left_semi")
-            .select(col("dst").as("node"))
-        val cands = mat(candNew.unionByName(candProp).distinct())
-        changedPrev =
-          if (cands.isEmpty) mat(cands.withColumn("dist", lit(0L)).where(lit(false)))
-          else {
-            // absolute recompute: min over ALL in-edges of m_{h−1} + w
-            val inEdges = post
-              .join(broadcast(cands.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
-            val recomputed = inEdges
-              .join(prevEff.select(col("node").as("src"), col("dist").as("__pd")), Seq("src"))
-              .groupBy(col("dst").as("node")).agg(min(col("__pd") + col("w")).as("dist"))
-            val storedH = state.where(col("h") === h).select(col("node"), col("dist").as("__sd"))
-            mat(recomputed.join(storedH, Seq("node"), "left")
-              .where(col("__sd").isNull || col("dist") < col("__sd"))
-              .select(col("node"), col("dist")))
-          }
-        if (!changedPrev.isEmpty) allChanged += changedPrev.withColumn("h", lit(h))
-      }
-
-      if (allChanged.nonEmpty) {
-        val inserts = mat(allChanged.reduce(_ unionByName _)
-          .select(col("node"), col("h"), col("dist")))
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, distTable, state, inserts, inserts.select(col("node"), col("h")),
-          Seq("node", "h"), "node", buckets)
-      }
-
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges,
-        newEdges.select(col("src"), col("dst")).where(lit(false)),
-        Seq("src", "dst"), "src", buckets,
-        touchedFromChanges = Some(newEdges.select(col("src"))))
-    } finally {
-      canon.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+      val cands = Materialize(candNew.unionByName(candProp).distinct())
+      changedPrev =
+        if (cands.isEmpty) Materialize(cands.withColumn("dist", lit(0L)).where(lit(false)))
+        else {
+          // absolute recompute: min over ALL in-edges of m_{h−1} + w
+          val inEdges = post
+            .join(broadcast(cands.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
+          val recomputed = inEdges
+            .join(prevEff.select(col("node").as("src"), col("dist").as("__pd")), Seq("src"))
+            .groupBy(col("dst").as("node")).agg(min(col("__pd") + col("w")).as("dist"))
+          val storedH = state.where(col("h") === h).select(col("node"), col("dist").as("__sd"))
+          Materialize(recomputed.join(storedH, Seq("node"), "left")
+            .where(col("__sd").isNull || col("dist") < col("__sd"))
+            .select(col("node"), col("dist")))
+        }
+      if (!changedPrev.isEmpty) allChanged += changedPrev.withColumn("h", lit(h))
     }
+
+    if (allChanged.nonEmpty) {
+      val inserts = Materialize(allChanged.reduce(_ unionByName _)
+        .select(col("node"), col("h"), col("dist")))
+      IvmMaintenance.rebuildTouchedBuckets(
+        spark, distTable, state, inserts, inserts.select(col("node"), col("h")),
+        Seq("node", "h"), "node", buckets)
+    }
+
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges,
+      newEdges.select(col("src"), col("dst")).where(lit(false)),
+      Seq("src", "dst"), "src", buckets,
+      touchedFromChanges = Some(newEdges.select(col("src"))))
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.sources.Storage
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,39 +43,37 @@ final class IngestTopKView(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(baseTable) && spark.catalog.tableExists(viewTable),
       s"IngestTopKView: '$baseTable' and '$viewTable' must be initialized first")
 
-    val changes = batch.persist()
-    try {
-      val inserts = changes.where(col("op") === "insert")
-        .select(col("row_id"), col("grp"), col("score"))
-      val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
-      spark.sql(s"REFRESH TABLE $baseTable")
-      val base = spark.table(baseTable)
+    val changes = Materialize.persist(batch)
+    val inserts = changes.where(col("op") === "insert")
+      .select(col("row_id"), col("grp"), col("score"))
+    val deleteIds = changes.where(col("op") === "delete").select(col("row_id"))
+    spark.sql(s"REFRESH TABLE $baseTable")
+    val base = spark.table(baseTable)
 
-      // 1) view update, guarded for replay ([[IvmMaintenance]] pieces 1+2);
-      //    no live-id-reuse probe here — reuse is a REPLACE by contract
-      spark.sql(s"REFRESH TABLE $viewTable")
-      val view = spark.table(viewTable)
-      if (batchId > IvmMaintenance.lastApplied(view)) {
-        IvmMaintenance.assertUniqueInsertIds("IngestTopKView", inserts, "row_id",
-          "the base rebuild keeps one row per id while the view pool competes " +
-            "both; mint unique ids upstream")
-        val merged = Storage.mergeTopKDelta(
-            view.where(col("rank").isNotNull).drop("__batch"),
-            base.select(col("row_id"), col("grp"), col("score")),
-            inserts, deleteIds, "row_id", "grp", "score", k)
-          .withColumn("__batch", lit(batchId))
-        IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
-      }
+    // 1) view update, guarded for replay ([[IvmMaintenance]] pieces 1+2);
+    //    no live-id-reuse probe here — reuse is a REPLACE by contract
+    spark.sql(s"REFRESH TABLE $viewTable")
+    val view = spark.table(viewTable)
+    if (batchId > IvmMaintenance.lastApplied(view)) {
+      IvmMaintenance.assertUniqueInsertIds("IngestTopKView", inserts, "row_id",
+        "the base rebuild keeps one row per id while the view pool competes " +
+          "both; mint unique ids upstream")
+      val merged = Storage.mergeTopKDelta(
+          view.where(col("rank").isNotNull).drop("__batch"),
+          base.select(col("row_id"), col("grp"), col("score")),
+          inserts, deleteIds, "row_id", "grp", "score", k)
+        .withColumn("__batch", lit(batchId))
+      IvmMaintenance.swapViewWithSentinel(spark, viewTable, merged, batchId)
+    }
 
-      // 2) base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
-      //    piece 4 — the GROUP is the bucket key)
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
-    } finally changes.unpersist()
+    // 2) base rebuild, touched buckets only, idempotent ([[IvmMaintenance]]
+    //    piece 4 — the GROUP is the bucket key)
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, baseTable, base, inserts, deleteIds, Seq("row_id"), "grp", buckets)
   }
 }

@@ -47,59 +47,47 @@ final class IngestTriangleCountsCdc(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(countTable),
       s"IngestTriangleCountsCdc: '$edgeTable' and '$countTable' must be initialized first")
     val (ins0, del0) = IngestComponentsCdc.parseCdcBatch("IngestTriangleCountsCdc", batch)
-    val ins = ins0.select(col("u"), col("v")).persist()
-    val del = del0.persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = { val m = Materialize(df); mats += m; m }
-    try {
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
-      if (newEdges.isEmpty && delEdges.isEmpty) return
+    val ins = Materialize.persist(ins0.select(col("u"), col("v")))
+    val del = Materialize.persist(del0)
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
+    if (newEdges.isEmpty && delEdges.isEmpty) return
 
-      val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
-      def tripleVertices(t: DataFrame): DataFrame =
-        t.select(explode(array(col("x"), col("y"), col("z"))).as("node"))
-      val gained = IngestTriangles.closedTriples(newEdges, post)
-      val lost = IngestTriangles.closedTriples(delEdges, old)
-      val touched = mat(tripleVertices(gained).unionByName(tripleVertices(lost)).distinct())
+    val post = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
+    def tripleVertices(t: DataFrame): DataFrame =
+      t.select(explode(array(col("x"), col("y"), col("z"))).as("node"))
+    val gained = IngestTriangles.closedTriples(newEdges, post)
+    val lost = IngestTriangles.closedTriples(delEdges, old)
+    val touched = Materialize(tripleVertices(gained).unionByName(tripleVertices(lost)).distinct())
 
-      if (!touched.isEmpty) {
-        val probeEdges = mat(post
-          .join(broadcast(touched.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
-          .unionByName(post
-            .join(broadcast(touched.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
-            .select(col("u"), col("v")))
-          .distinct())
-        val counts = mat(
-          tripleVertices(IngestTriangles.closedTriples(probeEdges, post))
-            .join(broadcast(touched), Seq("node"), "left_semi")
-            .groupBy(col("node")).agg(count(lit(1)).as("triangles")))
-        spark.sql(s"REFRESH TABLE $countTable")
-        IvmMaintenance.rebuildTouchedBuckets(
-          spark, countTable, spark.table(countTable), counts, touched,
-          Seq("node"), "node", buckets)
-      }
-
+    if (!touched.isEmpty) {
+      val probeEdges = Materialize(post
+        .join(broadcast(touched.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
+        .unionByName(post
+          .join(broadcast(touched.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
+          .select(col("u"), col("v")))
+        .distinct())
+      val counts = Materialize(
+        tripleVertices(IngestTriangles.closedTriples(probeEdges, post))
+          .join(broadcast(touched), Seq("node"), "left_semi")
+          .groupBy(col("node")).agg(count(lit(1)).as("triangles")))
+      spark.sql(s"REFRESH TABLE $countTable")
       IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) delEdges.unpersist()
-      mats.foreach(_.unpersist())
-      ()
+        spark, countTable, spark.table(countTable), counts, touched,
+        Seq("node"), "node", buckets)
     }
+
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -100,40 +101,34 @@ final class IngestTriangles(
     countTable: String
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(countTable),
       s"IngestTriangles: '$edgeTable' and '$countTable' must be initialized first")
-    val canon = batch
+    val canon = Materialize.persist(batch
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .where(col("u") =!= col("v")).distinct().persist()
-    var newEdges: DataFrame = null
-    try {
+      .where(col("u") =!= col("v")).distinct())
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable)
+    val newEdges = Materialize.persist(canon.join(old, Seq("u", "v"), "left_anti"))
+
+    spark.sql(s"REFRESH TABLE $countTable")
+    val cnt = spark.table(countTable)
+    if (batchId > IvmMaintenance.lastApplied(cnt)) {
+      val all = old.unionByName(newEdges)
+      val delta = IngestTriangles.closedTriples(newEdges, all).count()
+      val prevRow = cnt.where(col("n_triangles").isNotNull)
+        .agg(coalesce(max(col("n_triangles")), lit(0L))).head().getLong(0)
+      val merged = spark.range(1).select(
+        lit(prevRow + delta).as("n_triangles"), lit(batchId).as("__batch"))
+      IvmMaintenance.swapViewWithSentinel(spark, countTable, merged, batchId)
+    }
+
+    // idempotent append AFTER the count swap (view-first discipline)
+    if (!newEdges.isEmpty) {
+      newEdges.select(old.columns.map(col).toIndexedSeq: _*)
+        .write.mode(SaveMode.Append).format("parquet").insertInto(edgeTable)
       spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable)
-      newEdges = canon.join(old, Seq("u", "v"), "left_anti").persist()
-
-      spark.sql(s"REFRESH TABLE $countTable")
-      val cnt = spark.table(countTable)
-      if (batchId > IvmMaintenance.lastApplied(cnt)) {
-        val all = old.unionByName(newEdges)
-        val delta = IngestTriangles.closedTriples(newEdges, all).count()
-        val prevRow = cnt.where(col("n_triangles").isNotNull)
-          .agg(coalesce(max(col("n_triangles")), lit(0L))).head().getLong(0)
-        val merged = spark.range(1).select(
-          lit(prevRow + delta).as("n_triangles"), lit(batchId).as("__batch"))
-        IvmMaintenance.swapViewWithSentinel(spark, countTable, merged, batchId)
-      }
-
-      // idempotent append AFTER the count swap (view-first discipline)
-      if (!newEdges.isEmpty) {
-        newEdges.select(old.columns.map(col).toIndexedSeq: _*)
-          .write.mode(SaveMode.Append).format("parquet").insertInto(edgeTable)
-        spark.sql(s"REFRESH TABLE $edgeTable")
-      }
-    } finally {
-      canon.unpersist()
-      if (newEdges != null) { newEdges.unpersist(); () }
     }
   }
 }

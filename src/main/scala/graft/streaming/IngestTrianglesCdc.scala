@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,53 +47,45 @@ final class IngestTrianglesCdc(
     buckets: Int
 ) extends ((DataFrame, Long) => Unit) with Serializable {
 
-  override def apply(batch: DataFrame, batchId: Long): Unit = {
+  override def apply(batch: DataFrame, batchId: Long): Unit = Materialize.scope {
     val spark = batch.sparkSession
     require(spark.catalog.tableExists(edgeTable) && spark.catalog.tableExists(countTable),
       s"IngestTrianglesCdc: '$edgeTable' and '$countTable' must be initialized first")
     def canon(df: DataFrame): DataFrame = df
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v")).distinct()
-    val ins = canon(batch.where(col("op") === "insert")).persist()
-    val del = canon(batch.where(col("op") === "delete")).persist()
-    var newEdges: DataFrame = null
-    var delEdges: DataFrame = null
-    try {
-      if (!ins.join(del, Seq("u", "v"), "left_semi").isEmpty) throw new IllegalStateException(
-        "IngestTrianglesCdc: a batch inserts AND deletes the same edge — order within " +
-          "a batch is undefined (unordered-set contract, the mergeAggDelta discipline); " +
-          "split the operations across batches")
-      spark.sql(s"REFRESH TABLE $edgeTable")
-      val old = spark.table(edgeTable).select(col("u"), col("v"))
-      newEdges = ins.join(old, Seq("u", "v"), "left_anti").persist()
-      delEdges = del.join(old, Seq("u", "v"), "left_semi").persist()
+    val ins = Materialize.persist(canon(batch.where(col("op") === "insert")))
+    val del = Materialize.persist(canon(batch.where(col("op") === "delete")))
+    if (!ins.join(del, Seq("u", "v"), "left_semi").isEmpty) throw new IllegalStateException(
+      "IngestTrianglesCdc: a batch inserts AND deletes the same edge — order within " +
+        "a batch is undefined (unordered-set contract, the mergeAggDelta discipline); " +
+        "split the operations across batches")
+    spark.sql(s"REFRESH TABLE $edgeTable")
+    val old = spark.table(edgeTable).select(col("u"), col("v"))
+    val newEdges = Materialize.persist(ins.join(old, Seq("u", "v"), "left_anti"))
+    val delEdges = Materialize.persist(del.join(old, Seq("u", "v"), "left_semi"))
 
-      spark.sql(s"REFRESH TABLE $countTable")
-      val cnt = spark.table(countTable)
-      if (batchId > IvmMaintenance.lastApplied(cnt)) {
-        val after = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
-        val changedAfter = newEdges // deletes are absent from E′ by construction
-        val changedBefore = delEdges // inserts are absent from E by construction
-        val gained = IngestTriangles.closedTriples(changedAfter, after).count()
-        val lost = IngestTriangles.closedTriples(changedBefore, old).count()
-        val prevRow = cnt.where(col("n_triangles").isNotNull)
-          .agg(coalesce(max(col("n_triangles")), lit(0L))).head().getLong(0)
-        val merged = spark.range(1).select(
-          lit(prevRow + gained - lost).as("n_triangles"), lit(batchId).as("__batch"))
-        IvmMaintenance.swapViewWithSentinel(spark, countTable, merged, batchId)
-      }
-
-      // touched-bucket edge-store rebuild on the composite (u, v) identity;
-      // NET feeds (newEdges/delEdges), per rebuildTouchedBuckets' contract
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
-        Seq("u", "v"), "u", buckets,
-        touchedFromChanges =
-          Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
-    } finally {
-      ins.unpersist(); del.unpersist()
-      if (newEdges != null) newEdges.unpersist()
-      if (delEdges != null) { delEdges.unpersist(); () }
+    spark.sql(s"REFRESH TABLE $countTable")
+    val cnt = spark.table(countTable)
+    if (batchId > IvmMaintenance.lastApplied(cnt)) {
+      val after = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
+      val changedAfter = newEdges // deletes are absent from E′ by construction
+      val changedBefore = delEdges // inserts are absent from E by construction
+      val gained = IngestTriangles.closedTriples(changedAfter, after).count()
+      val lost = IngestTriangles.closedTriples(changedBefore, old).count()
+      val prevRow = cnt.where(col("n_triangles").isNotNull)
+        .agg(coalesce(max(col("n_triangles")), lit(0L))).head().getLong(0)
+      val merged = spark.range(1).select(
+        lit(prevRow + gained - lost).as("n_triangles"), lit(batchId).as("__batch"))
+      IvmMaintenance.swapViewWithSentinel(spark, countTable, merged, batchId)
     }
+
+    // touched-bucket edge-store rebuild on the composite (u, v) identity;
+    // NET feeds (newEdges/delEdges), per rebuildTouchedBuckets' contract
+    IvmMaintenance.rebuildTouchedBuckets(
+      spark, edgeTable, spark.table(edgeTable), newEdges, delEdges,
+      Seq("u", "v"), "u", buckets,
+      touchedFromChanges =
+        Some(newEdges.select(col("u")).unionByName(delEdges.select(col("u")))))
   }
 }

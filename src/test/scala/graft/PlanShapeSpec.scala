@@ -35,12 +35,27 @@ class PlanShapeSpec extends SparkSpec {
     * both sweeps read the cache; tests that re-plan under a modified
     * session conf (the broadcast-threshold toggles) stay on the direct
     * path, since a cached plan would not see the conf change.
+    *
+    * The cache is pinned to the suite's default plan conf, read when the
+    * suite is constructed and before any test can toggle it: the cache is
+    * built only under those values (checked), and every query is planned
+    * as it is cached, so a later toggle cannot reach a cached plan.
     */
+  private val planConfKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+  private def planConf = planConfKeys.map(k => k -> spark.conf.getOption(k))
+  private val suitePlanConf = planConf
+
   private lazy val allQueryExecutions
-      : Map[String, org.apache.spark.sql.execution.QueryExecution] =
+      : Map[String, org.apache.spark.sql.execution.QueryExecution] = {
+    assert(planConf == suitePlanConf,
+      s"the sweep cache would be built under $planConf, not the suite's $suitePlanConf")
     SparkEntry.queries.keys.toSeq.sorted.map { n =>
-      n -> SparkEntry.queries(n)(spark, sfDir).queryExecution
+      val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      qe.executedPlan // planned now, under the conf just checked
+      n -> qe
     }.toMap
+  }
 
   test("q02 filter is pushed to the parquet scan and the schema is pruned") {
     val p = plan("q02_filter")
