@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Regime-gated fan-out repartition (guide §2.5 synthetic-key spreading,
   * gated so §2.4's "no unconditional exchanges" still holds at scale).
@@ -31,10 +33,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 private[graft] object Fanout {
   /** True when `probe`'s physical partition count is below the session
     * shuffle-partition target — the collapsed regime the pin exists for.
+    * Throws when `probe`'s plan holds an exchange: reading its partition
+    * count would run that exchange's jobs. The check reads the plan AQE
+    * starts from, so it runs no job itself.
     */
-  def isNarrow(probe: DataFrame): Boolean =
+  def isNarrow(probe: DataFrame): Boolean = {
+    val plan = probe.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec => aqe.inputPlan
+      case p => p
+    }
+    require(plan.find(_.isInstanceOf[Exchange]).isEmpty,
+      "Fanout probe must be exchange-free (a scan, a checkpoint, or a projection of one); " +
+        s"got:\n${plan.treeString}")
     probe.rdd.getNumPartitions <
       probe.sparkSession.sessionState.conf.numShufflePartitions
+  }
 
   /** `df.repartition(sessionShufflePartitions, keys…)` when `probe` is
     * narrower than the session target; `df` unchanged otherwise.

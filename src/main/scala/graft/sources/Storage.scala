@@ -666,7 +666,9 @@ object Storage {
       val carry = if (k == n - 1) "value" else keys(k)
       val t1 = broadcast(dX).join(olds(k), Seq(link))
         .select(col("grp"), col(carry), col("sign"))
-      val t2 = restrictedPrefix(k - 1, deltas(k).select(col(link)).distinct())
+      // a semi join's filter side needs no distinct, and without one a
+      // local delta's key list broadcasts with no job of its own
+      val t2 = restrictedPrefix(k - 1, deltas(k).select(col(link)))
         .join(broadcast(deltas(k).select(col(link), col(carry), col("sign"))), Seq(link))
         .select(col("grp"), col(carry), col("sign"))
       val t3 = dX.select(col(link), col("grp"), col("sign").as("__sx"))

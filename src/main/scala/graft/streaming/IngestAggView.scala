@@ -71,7 +71,7 @@ final class IngestAggView(
     // 1) view update, guarded for replay ([[IvmMaintenance]] pieces 1+2)
     spark.sql(s"REFRESH TABLE $viewTable")
     val view = spark.table(viewTable)
-    if (batchId > IvmMaintenance.lastApplied(view)) {
+    if (batchId > IvmMaintenance.lastApplied(spark, viewTable)) {
       val merged = Storage.mergeAggDelta(
           view.where(col("n").isNotNull).drop("__batch"),
           base, inserts, deleteIds, rowId, key, value)

@@ -50,12 +50,11 @@ final class IngestDistinctView(
 
     spark.sql(s"REFRESH TABLE $refTable")
     val ref = spark.table(refTable)
-    if (batchId > IvmMaintenance.lastApplied(ref)) {
-      IvmMaintenance.assertUniqueInsertIds("IngestDistinctView", inserts, "row_id",
-        "refcounts would double-count while the base keeps one row")
-      IvmMaintenance.assertNoLiveIdReuse("IngestDistinctView", base, inserts,
-        deleteIds, "row_id",
-        "refcount arithmetic has no replace semantics")
+    if (batchId > IvmMaintenance.lastApplied(spark, refTable)) {
+      IvmMaintenance.assertRowIdContract(
+        Seq(IvmMaintenance.RowIds("IngestDistinctView", base, inserts, deleteIds)), "row_id",
+        "refcounts would double-count while the base keeps one row",
+        Some("refcount arithmetic has no replace semantics"))
       val merged = Storage.mergeDistinctDelta(
           ref.where(col("rc").isNotNull).drop("__batch"),
           base.select(col("row_id"), col("grp"), col("value")),

@@ -2,8 +2,11 @@ package graft.streaming
 
 import graft.Materialize
 import graft.sources.Storage
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Cross-batch streaming maintenance of an N-WAY join-chain view — the
   * streaming face of [[graft.sources.Storage.mergeJoinViewNDelta]], and
@@ -19,11 +22,21 @@ import org.apache.spark.sql.functions._
   *  2. every side's BASE row store, hash-bucket partitioned on its LEFT
   *     link key (side 0 on `keys(0)`; side i on `keys(i−1)` — the
   *     [[IngestJoinView3]] convention generalized), touched buckets only
-  *     via [[IvmMaintenance.rebuildTouchedBuckets]].
+  *     via [[IvmMaintenance.rebuildBuckets]].
   *
-  * Replay safety (view `__batch` + drained-view sentinel `n IS NULL`)
-  * and the per-side loud row-id contract (full-base probe) are the
-  * [[IvmMaintenance]] pieces, shared verbatim with every maintainer.
+  * A batch's latency is its job count, so the batch is read onto the
+  * driver once and everything derived from it stays there: one job
+  * gathers every side's signed delta (inserts at +1, the base rows the
+  * deletes recover at −1, each tagged with its bucket), which then feeds
+  * the delta fold as local relations and names every side's touched
+  * buckets without another job. The row-id contract probes all sides'
+  * bases in one job. A 3-side first-delivery batch runs at most 38 jobs
+  * (see the budget in [[IvmMaintenance]], pinned by `JoinViewLawSpec`).
+  *
+  * Replay safety (the view's `_v<batchId>` watermark + drained-view
+  * sentinel `n IS NULL`) and the per-side loud row-id contract
+  * (full-base probe) are the [[IvmMaintenance]] pieces, shared verbatim
+  * with every maintainer.
   *
   * Side schemas follow [[graft.sources.Storage.mergeJoinViewNDelta]]:
   * side 0 `(row_id, keys(0), grp)`, middle side i
@@ -55,8 +68,14 @@ final class IngestJoinViewN(
     val spark = batch.sparkSession
     require((tables :+ viewTable).forall(spark.catalog.tableExists),
       s"IngestJoinViewN: ${(tables :+ viewTable).mkString(", ")} must be initialized first")
+    def local(rows: Array[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, schema)
 
-    val changes = Materialize.persist(batch)
+    // The batch, read once onto the driver. The delta algebra broadcasts
+    // every delta-derived relation, so the changes fit there, and every
+    // later read of a filter or projection of them is a local relation
+    // with no job of its own.
+    val changes = local(batch.collect(), batch.schema)
     tables.foreach(t => spark.sql(s"REFRESH TABLE $t"))
     val olds = tables.map(spark.table)
     val ins = (0 until n).map { i =>
@@ -67,26 +86,36 @@ final class IngestJoinViewN(
       changes.where(col("side") === i.toString && col("op") === "delete")
         .select(col("row_id"))
     }
-    val deltas = (0 until n).map { i =>
-      val cols = payload(i).map(col)
-      ins(i).select(cols :+ lit(1).as("sign"): _*)
-        .unionByName(olds(i).join(del(i), Seq("row_id"), "left_semi")
+    // Every side's signed delta from ONE job: its inserts at +1 and the
+    // base rows its deletes recover at −1, each with the bucket it lives
+    // in. Held on the driver, it feeds the delta algebra as local
+    // relations and names the touched buckets without another job.
+    val signed = (0 until n).map { i =>
+      val cols = (lit(i).as("__side") +: payload(i).map(col)) :+ col("bkt")
+      ins(i).withColumn("bkt", IvmMaintenance.bucketOf(bucketKey(i), buckets))
+        .select(cols :+ lit(1).as("sign"): _*)
+        .unionByName(olds(i)
+          .where(col("row_id").isin(del(i).collect().map(_.get(0)).toIndexedSeq: _*))
           .select(cols :+ lit(-1).as("sign"): _*))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val signedRows = signed.collect()
+    val signedLocal = local(signedRows, signed.schema)
+    val deltas = (0 until n).map { i =>
+      signedLocal.where(col("__side") === i).select((payload(i) :+ "sign").map(col): _*)
+    }
+    val touched = (0 until n).map { i =>
+      signedRows.filter(_.getInt(0) == i).map(r => r.getInt(r.fieldIndex("bkt"))).distinct.toSeq
     }
 
-    spark.sql(s"REFRESH TABLE $viewTable")
-    val view = spark.table(viewTable)
-    if (batchId > IvmMaintenance.lastApplied(view)) {
-      (0 until n).foreach { i =>
-        IvmMaintenance.assertUniqueInsertIds(s"IngestJoinViewN side $i", ins(i), "row_id",
-          "the delta algebra counts each insert while the bucket rebuild keeps " +
-            "one row per id")
-        IvmMaintenance.assertNoLiveIdReuse(s"IngestJoinViewN side $i", olds(i), ins(i),
-          del(i), "row_id",
-          "the base rebuild drops the old row while the view delta never subtracted it")
-      }
+    if (batchId > IvmMaintenance.lastApplied(spark, viewTable)) {
+      IvmMaintenance.assertRowIdContract(
+        (0 until n).map(i => IvmMaintenance.RowIds(s"IngestJoinViewN side $i", olds(i), ins(i), del(i))),
+        "row_id",
+        "the delta algebra counts each insert while the bucket rebuild keeps one row per id",
+        Some("the base rebuild drops the old row while the view delta never subtracted it"))
+      spark.sql(s"REFRESH TABLE $viewTable")
       val merged = Storage.mergeJoinViewNDelta(
-          view.where(col("n").isNotNull).drop("__batch"),
+          spark.table(viewTable).where(col("n").isNotNull).drop("__batch"),
           (0 until n).map(i => olds(i).select(payload(i).map(col): _*)),
           deltas, keys)
         .withColumn("__batch", lit(batchId))
@@ -94,8 +123,8 @@ final class IngestJoinViewN(
     }
 
     (0 until n).foreach { i =>
-      IvmMaintenance.rebuildTouchedBuckets(
-        spark, tables(i), olds(i), ins(i), del(i), Seq("row_id"), bucketKey(i), buckets)
+      IvmMaintenance.rebuildBuckets(spark, tables(i), olds(i), ins(i), del(i), Seq("row_id"),
+        bucketKey(i), buckets, touched(i))
     }
   }
 }

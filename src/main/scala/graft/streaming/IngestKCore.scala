@@ -86,8 +86,11 @@ object IngestKCore {
           s"affected region keeps growing; raise maxRounds or recompute from scratch")
       val nbrs = adjOf(post, frontier).select(col("w").as("node")).distinct()
         .join(broadcast(x), Seq("node"), "left_anti")
+      val (prevFrontier, prevX) = (frontier, x)
       frontier = Materialize(degEnough(minusBig(nbrs, core)))
       x = Materialize(x.unionByName(frontier))
+      Materialize.release(prevFrontier)
+      Materialize.release(prevX)
     }
     if (x.isEmpty) x
     else {
@@ -112,6 +115,7 @@ object IngestKCore {
         val nextCount = next.count()
         stable = nextCount == liveCount
         liveCount = nextCount
+        Materialize.release(live)
         live = next
       }
       live
@@ -143,13 +147,17 @@ object IngestKCore {
         .join(degs, Seq("x"), "left")
         .where(coalesce(col("d"), lit(0L)) < k)
         .select(col("x").as("node")))
+      val (prevFrontier, prevRemoved) = (frontier, removed)
       if (drop.isEmpty) frontier = Materialize(drop)
       else {
         removed = Materialize(removed.unionByName(drop))
         frontier = Materialize(
           interBig(core, adjOf(post, drop).select(col("w").as("node")).distinct())
           .join(broadcast(removed), Seq("node"), "left_anti"))
+        Materialize.release(prevRemoved)
       }
+      Materialize.release(prevFrontier)
+      Materialize.release(drop)
     }
     removed
   }

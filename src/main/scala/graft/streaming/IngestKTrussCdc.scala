@@ -86,12 +86,17 @@ final class IngestKTrussCdc(
         val drop = Materialize(frontier.join(sup, Seq("u", "v"), "left")
           .where(coalesce(col("s"), lit(0L)) < minSup)
           .select(col("u"), col("v")))
+        val (prevFrontier, prevRemoved) = (frontier, removedAll)
         if (drop.isEmpty) frontier = Materialize(drop)
         else {
           val loseFrom = Materialize(partners(triRows(drop, live)))
           removedAll = Materialize(removedAll.unionByName(drop))
           frontier = Materialize(loseFrom.join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
+          Materialize.release(loseFrom)
+          Materialize.release(prevRemoved)
         }
+        Materialize.release(prevFrontier)
+        Materialize.release(drop)
       }
     }
     val truss1 = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
@@ -124,8 +129,10 @@ final class IngestKTrussCdc(
           s"raise maxRounds or recompute from scratch")
       val p = Materialize(partners(triRows(frontier2, post)))
       val cand = Materialize(nonTruss1(p).join(broadcast(x), Seq("u", "v"), "left_anti"))
+      val (prevFrontier, prevX) = (frontier2, x)
       frontier2 = Materialize(fullSupOk(cand))
       x = Materialize(x.unionByName(frontier2))
+      Seq(p, cand, prevFrontier, prevX).foreach(Materialize.release)
     }
     val promoted: DataFrame =
       if (x.isEmpty) x
@@ -162,6 +169,7 @@ final class IngestKTrussCdc(
           val nextCount = next.count()
           stable = nextCount == liveCount
           liveCount = nextCount
+          Materialize.release(live)
           live = next
         }
         live

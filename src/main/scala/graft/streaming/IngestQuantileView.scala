@@ -91,12 +91,11 @@ final class IngestQuantileView(
 
     spark.sql(s"REFRESH TABLE $cellTable")
     val cells = spark.table(cellTable)
-    if (batchId > IvmMaintenance.lastApplied(cells)) {
-      IvmMaintenance.assertUniqueInsertIds("IngestQuantileView", inserts, "row_id",
-        "cell refcounts would double-count while the base keeps one row")
-      IvmMaintenance.assertNoLiveIdReuse("IngestQuantileView", base, inserts,
-        deleteIds, "row_id",
-        "refcount arithmetic has no replace semantics")
+    if (batchId > IvmMaintenance.lastApplied(spark, cellTable)) {
+      IvmMaintenance.assertRowIdContract(
+        Seq(IvmMaintenance.RowIds("IngestQuantileView", base, inserts, deleteIds)), "row_id",
+        "cell refcounts would double-count while the base keeps one row",
+        Some("refcount arithmetic has no replace semantics"))
       val liveCells = cells.where(col("rc").isNotNull).drop("__batch")
       val basePayload = base.select(payload.map(col): _*)
       val merged = (weight match {

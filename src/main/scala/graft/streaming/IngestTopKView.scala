@@ -59,10 +59,12 @@ final class IngestTopKView(
     //    no live-id-reuse probe here — reuse is a REPLACE by contract
     spark.sql(s"REFRESH TABLE $viewTable")
     val view = spark.table(viewTable)
-    if (batchId > IvmMaintenance.lastApplied(view)) {
-      IvmMaintenance.assertUniqueInsertIds("IngestTopKView", inserts, "row_id",
+    if (batchId > IvmMaintenance.lastApplied(spark, viewTable)) {
+      IvmMaintenance.assertRowIdContract(
+        Seq(IvmMaintenance.RowIds("IngestTopKView", base, inserts, deleteIds)), "row_id",
         "the base rebuild keeps one row per id while the view pool competes " +
-          "both; mint unique ids upstream")
+          "both; mint unique ids upstream",
+        reuseConsequence = None)
       val merged = Storage.mergeTopKDelta(
           view.where(col("rank").isNotNull).drop("__batch"),
           base.select(col("row_id"), col("grp"), col("score")),

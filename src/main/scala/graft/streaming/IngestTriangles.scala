@@ -114,7 +114,7 @@ final class IngestTriangles(
 
     spark.sql(s"REFRESH TABLE $countTable")
     val cnt = spark.table(countTable)
-    if (batchId > IvmMaintenance.lastApplied(cnt)) {
+    if (batchId > IvmMaintenance.lastApplied(spark, countTable)) {
       val all = old.unionByName(newEdges)
       val delta = IngestTriangles.closedTriples(newEdges, all).count()
       val prevRow = cnt.where(col("n_triangles").isNotNull)

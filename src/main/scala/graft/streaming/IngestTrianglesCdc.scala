@@ -67,7 +67,7 @@ final class IngestTrianglesCdc(
 
     spark.sql(s"REFRESH TABLE $countTable")
     val cnt = spark.table(countTable)
-    if (batchId > IvmMaintenance.lastApplied(cnt)) {
+    if (batchId > IvmMaintenance.lastApplied(spark, countTable)) {
       val after = old.join(delEdges, Seq("u", "v"), "left_anti").unionByName(newEdges)
       val changedAfter = newEdges // deletes are absent from E′ by construction
       val changedBefore = delEdges // inserts are absent from E by construction

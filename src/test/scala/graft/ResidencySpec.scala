@@ -25,7 +25,10 @@ class ResidencySpec extends SparkSpec {
       "q180_scc", "q183_sssp", "q198_ktruss")) {
     test(s"$name returns holding only the blocks its result reads") {
       val before = ResidentBlocks.rddIds(spark.sparkContext)
-      val out = SparkEntry.queries(name)(spark, sf)
+      val (out, stored) = ResidentBlocks.storedDuring(spark.sparkContext)(
+        SparkEntry.queries(name)(spark, sf))
+      // a gate that stores no block could not fail the check below
+      assert(stored.nonEmpty, s"$name stored no RDD blocks, so its stray check proves nothing")
       val read = readBy(out)
       def stray = ResidentBlocks.rddIds(spark.sparkContext) -- before -- read
       // removal is asynchronous: a bounded wait, never a GC
