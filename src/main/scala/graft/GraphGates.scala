@@ -55,8 +55,9 @@ object GraphGates {
   }
 
   /** q154 — PageRank over the supplier transition digraph, 5 iterations,
-    * d=0.85, ranks on the 10^-7 grid. One join + one aggregate + one
-    * bounded dangling scalar per iteration ([[Graphs.pageRank]]).
+    * d=0.85, ranks on the 10^-7 grid. One broadcast join + one aggregate
+    * per iteration, the dangling mass observed on the round's checkpoint
+    * job ([[Graphs.pageRank]]).
     */
   private def q154PageRank(s: SparkSession, d: String): DataFrame =
     Graphs.pageRank(

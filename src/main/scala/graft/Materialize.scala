@@ -1,8 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -36,11 +42,32 @@ import scala.util.control.NonFatal
   * running the iterative operators. With the conf unset nothing changes —
   * the local[*] test/bench profile keeps the zero-IO localCheckpoint path.
   *
+  * Size. A checkpoint carries its EXACT row count: every call observes
+  * `count(1)` on its own checkpoint job (a `CollectMetrics` node at the
+  * root of the checkpointed plan, under a metric name unique to the call)
+  * and rebuilds the result's `LogicalRDD` with `rowCount = n` and
+  * `sizeInBytes = n × row width` (Spark's per-row width estimate). Without
+  * this the `LogicalRDD` keeps the optimizer's estimate of the plan it
+  * replaced — after a cross join or a few inner joins that is exabytes,
+  * and the planner then broadcasts the wrong side of the next join. Rows
+  * with a variable-width column (strings, arrays, maps) keep the larger
+  * of that product and the replaced plan's estimate: a default width
+  * understates long strings, and an understated size is what makes a
+  * broadcast run out of memory. [[rows]] reads the count back with no
+  * job; [[observed]] returns further aggregates computed on the same job.
+  * The metrics are read from the checkpoint action's own query execution
+  * when the action returns. They sit in its result stage, whose
+  * accumulator updates Spark applies once per partition, so a retried
+  * task does not count twice. If a Spark build ever leaves them out, the
+  * same aggregates are recomputed over the materialized rows (one extra
+  * job, never a wrong count).
+  *
   * Releasing. `Dataset.unpersist()` frees nothing here: checkpoint blocks
   * are not `CacheManager` entries. Intermediate state is owned by a
-  * [[scope]] instead. Every [[apply]] and [[persist]] call registers what
-  * it creates with the innermost scope open on the calling thread, and the
-  * scope frees it when its body exits, normally or by an exception:
+  * [[scope]] instead. Every [[apply]], [[observed]] and [[persist]] call
+  * registers what it creates with the innermost scope open on the calling
+  * thread, and the scope frees it when its body exits, normally or by an
+  * exception:
   *
   *  - a local checkpoint's blocks are removed (`unpersist(blocking =
   *    false)` on the RDD behind its `LogicalRDD`);
@@ -97,9 +124,55 @@ private[graft] object Materialize {
   private def lockFor(sc: org.apache.spark.SparkContext): AnyRef =
     ctxLocks.computeIfAbsent(sc, _ => new AnyRef)
 
-  def apply[T](ds: Dataset[T]): Dataset[T] = {
+  /** `ds` materialized: a checkpoint that knows its row count and size
+    * (see the class doc), owned by the innermost open [[scope]].
+    */
+  def apply[T](ds: Dataset[T]): Dataset[T] = observed(ds)._1
+
+  /** [[apply]], plus the aggregate `metrics` (each named by `.as`)
+    * evaluated over `ds`'s rows on the same checkpoint job: the returned
+    * row holds them by name. Loop scalars — a convergence delta, a
+    * changed count, the dangling rank mass — cost no job of their own.
+    */
+  def observed[T](ds: Dataset[T], metrics: Column*): (Dataset[T], Row) = {
+    val name = s"graft_materialize_${observations.incrementAndGet()}"
+    val all = count(lit(1)).as(RowsMetric) +: metrics
+    val watched = ds.observe(name, all.head, all.tail: _*)
+    val raw = checkpoint(watched)
+    val m = watched.queryExecution.observedMetrics.getOrElse(name,
+      raw.agg(all.head, all.tail: _*).head())
+    val out = GraftBridge.withStats(raw, exactStats(raw, m.getAs[Long](RowsMetric)))
+    checkpointRdd(out).foreach(rdd => own(Checkpointed(rdd)))
+    (out, m)
+  }
+
+  /** The row count of a [[apply]] / [[observed]] result, read from its
+    * statistics: no job. Anything else (a projection or filter over one,
+    * a plain Dataset) is refused — its count is not known.
+    */
+  def rows(ds: Dataset[_]): Long =
+    checkpointRdd(ds).flatMap(_ => ds.queryExecution.logical.stats.rowCount) match {
+      case Some(n) => n.toLong
+      case None => throw new IllegalArgumentException(
+        "Materialize.rows needs a Materialize result itself, not a plan over one: " +
+          ds.queryExecution.logical.simpleString(2))
+    }
+
+  private val RowsMetric = "__graft_rows"
+  private val observations = new AtomicLong
+
+  private def exactStats(ds: Dataset[_], rows: Long): Statistics = {
+    val plan = ds.queryExecution.logical
+    val size = EstimationUtils.getOutputSize(plan.output, rows)
+    val fixedWidth = plan.output.forall(a => UnsafeRow.isFixedLength(a.dataType))
+    Statistics(
+      sizeInBytes = if (fixedWidth) size else size.max(plan.stats.sizeInBytes),
+      rowCount = Some(rows))
+  }
+
+  private def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    val out = spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
+    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         lockFor(sc).synchronized {
@@ -118,8 +191,6 @@ private[graft] object Materialize {
         ds.checkpoint()
       case None => ds.localCheckpoint()
     }
-    checkpointRdd(out).foreach(rdd => own(Checkpointed(rdd)))
-    out
   }
 
   /** `ds.persist()`, owned by the innermost open [[scope]]: the scope

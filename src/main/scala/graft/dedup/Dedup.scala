@@ -910,10 +910,10 @@ object Dedup {
       .join(vertexIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
       .join(vertexIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi"))
     // Small-graph fast path (see the public scaladoc): one bounded collect
-    // + driver union-find replaces a jobs-per-iteration loop. The count is
-    // a cheap single job over the just-materialized (lineage-free) pairs.
+    // + driver union-find replaces a jobs-per-iteration loop. The pair
+    // count comes from the checkpoint's statistics, with no job.
     val ord = idOrdering(inUniverse.schema("doc_a").dataType)
-    if (ord.isDefined && localPairs > 0 && inUniverse.count() <= localPairs) {
+    if (ord.isDefined && localPairs > 0 && graft.Materialize.rows(inUniverse) <= localPairs) {
       val labels = localUnionFind(
         vertices.sparkSession,
         inUniverse.select(col("doc_a"), col("doc_b")).collect(),
@@ -948,9 +948,10 @@ object Dedup {
       // each doc's previous label out (min over the one tagged row) — the
       // convergence comparison needs no separate join against `labels`.
       val viaEdges = edges
-        .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
+        .join(labels.select(col("doc_id").as("src"), col("cluster_id")), Seq("src"))
         .select(col("dst").as("doc_id"), col("cluster_id"), lit(false).as("__own"))
-      val neighborMin = labels.withColumn("__own", lit(true)).unionByName(viaEdges)
+      val neighborMin = labels.select(col("doc_id"), col("cluster_id"), lit(true).as("__own"))
+        .unionByName(viaEdges)
         .groupBy(col("doc_id"))
         .agg(
           min(col("cluster_id")).as("cluster_id"),
@@ -960,39 +961,19 @@ object Dedup {
       // so the self-join is total; each round halves the remaining chain
       // depth -> O(log diameter) rounds instead of O(diameter), which is
       // what makes long boilerplate chains converge in a handful of jobs.
-      // The changed-count is observe()d on this same plan, and the
-      // materialization's eager action is what delivers it — ONE job per
-      // iteration carries the edge propagation, the doubling, and the
-      // convergence check ([[graft.Materialize]]: localCheckpoint by
-      // default, reliable checkpoint under graft.checkpointDir).
-      val obs = org.apache.spark.sql.Observation()
-      val tMat0 = System.nanoTime()
-      val updated = graft.Materialize(neighborMin
-        .join(
-          neighborMin.select(col("doc_id").as("__cid"), col("cluster_id").as("__cid2")),
-          col("cluster_id") === col("__cid"))
-        .observe(obs, count(when(col("__cid2") =!= col("__old"), 1)).as("changed"))
-        .select(col("doc_id"), col("__cid2").as("cluster_id")))
-      // Observation metrics arrive via the ASYNC listener bus, whose
-      // bounded queue can drop events under heavy driver load — a bare
-      // obs.get would then hang this loop forever. Bounded wait; on miss,
-      // fall back to an explicit count over the two MATERIALIZED datasets
-      // (one cheap extra job, never a hang, never a wrong answer).
-      val tMat1 = System.nanoTime()
-      changed =
-        try {
-          import scala.concurrent.duration.DurationInt
-          scala.concurrent.Await.result(obs.future, 30.seconds).getAs[Long]("changed")
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            updated
-              .join(labels.withColumnRenamed("cluster_id", "__old"), Seq("doc_id"))
-              .where(col("cluster_id") =!= col("__old"))
-              .count()
-        }
-      if (dbg) println(f"cc iter $i: mat ${(tMat1 - tMat0) / 1e9}%.3f s, " +
-        f"obs ${(System.nanoTime() - tMat1) / 1e9}%.3f s, " +
-        f"total ${(System.nanoTime() - tIter0) / 1e9}%.3f s, changed=$changed")
+      // The changed-count is observed on the materialization's own job
+      // ([[graft.Materialize.observed]]): ONE job per iteration carries
+      // the edge propagation, the doubling, and the convergence check.
+      val (updated, m) = graft.Materialize.observed(
+        neighborMin
+          .join(
+            neighborMin.select(col("doc_id").as("__cid"), col("cluster_id").as("__cid2")),
+            col("cluster_id") === col("__cid"))
+          .select(col("doc_id"), col("__cid2").as("cluster_id"),
+            (col("__cid2") =!= col("__old")).as("__moved")),
+        count(when(col("__moved"), 1)).as("changed"))
+      changed = m.getAs[Long]("changed")
+      if (dbg) println(f"cc iter $i: ${(System.nanoTime() - tIter0) / 1e9}%.3f s, changed=$changed")
       graft.Materialize.release(labels) // drop the superseded checkpoint's blocks
       labels = updated
       i += 1
@@ -1002,7 +983,7 @@ object Dedup {
     // One anti-join against the converged (materialized, lineage-free)
     // labels — paid once, not per iteration. `labels` covers exactly the
     // touched set, so the union is a disjoint, total labeling.
-    val out = labels.unionByName(
+    val out = labels.select(col("doc_id"), col("cluster_id")).unionByName(
       vertexIds.join(labels, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("cluster_id")))
     out

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * adjacency — and express each algorithm as the small number of
   * shuffles-per-round Catalyst can already schedule well:
   *
-  *  - [[pageRank]]: one join + one aggregate per iteration, lineage cut per
-  *    round ([[graft.Materialize]] — localCheckpoint by default, reliable
-  *    under `graft.checkpointDir`), dangling mass folded back uniformly.
+  *  - [[pageRank]]: one broadcast join + one aggregate per iteration,
+  *    lineage cut per round ([[graft.Materialize]] — localCheckpoint by
+  *    default, reliable under `graft.checkpointDir`), dangling mass folded
+  *    back uniformly.
   *  - [[kHopMinDist]]: frontier-only expansion — each round joins ONLY the
   *    newly-reached vertices against the edge list, so total work is
   *    O(edges touched by the closure), not O(rounds × |V|).
@@ -47,12 +48,13 @@ object Graphs {
     * where `D` is the summed rank of dangling nodes (outdeg 0), then
     * rounds onto the 10^-scale grid.
     *
-    * Scale shape: per iteration ONE shuffled join (ranks ⋈ edges on src —
-    * both sides hash-partitioned on the join key) + ONE aggregate on dst +
-    * ONE bounded scalar (the dangling sum) to the driver. Rank state is
-    * re-materialized per round to cut lineage, exactly like the CC loop in
-    * [[graft.dedup.Dedup.nearDupClusters]]; superseded round blocks are
-    * released. Nothing driver-side ever holds O(V).
+    * Scale shape: a round is three Spark jobs — the rank state broadcast
+    * into the edge join (the state is O(V), the edges O(E); the state's
+    * checkpoint carries its exact size, so the planner sees which side is
+    * small), ONE shuffle by node of `state ∪ shares` into one aggregate,
+    * and the state's checkpoint. The dangling mass `D` is observed on
+    * that checkpoint job and enters the next round as a literal; nothing
+    * driver-side ever holds O(V). Superseded round blocks are released.
     *
     * @param nodes relation containing every vertex (one column selected by
     *              `node`); duplicates tolerated (distinct applied)
@@ -83,18 +85,11 @@ object Graphs {
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .distinct())
-    val n = v.count().toDouble
+    val n = Materialize.rows(v).toDouble
     require(n > 0, "pageRank: empty node set")
 
-    // outdeg rides with the rank state so the per-iteration join emits
-    // rank/outdeg directly — outdeg is static, computed once.
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val withDeg = Materialize(
-      v.join(outdeg, Seq("node"), "left").na.fill(0L, Seq("outdeg")))
-
-    val init = round(lit(1.0 / n), scale)
     prIterations(
-      withDeg.select(col("node"), col("outdeg"), init.as("rank")), e, iters,
+      v.select(col("node"), round(lit(1.0 / n), scale).as("rank")), e, iters,
       (inflow, dangling) =>
         round(
           lit((1.0 - damping) / n) +
@@ -136,14 +131,14 @@ object Graphs {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
 
     val v = Materialize(nodes.select(node.cast("long").as("node")).where(col("node").isNotNull).distinct())
-    // e0 is MATERIALIZED before the share staging: both the edge
-    // relation (e) and the node-degree relation (withDeg) derive from
-    // it, and un-checkpointed each would recompute the caller's full
-    // edge input — for q184 a window over the whole lineitem relation —
-    // once more (round-17: two full transition passes measured in the
-    // q184 setup; one |E| checkpoint of three narrow columns buys the
-    // second pass back at any scale, since the caller's edge input is
-    // arbitrary upstream work).
+    // e0 is MATERIALIZED before the share staging: the staged edges read
+    // it twice (the edge rows and their out-weight), and un-checkpointed
+    // each read would recompute the caller's full edge input — for q184
+    // a window over the whole lineitem relation — once more (round-17:
+    // two full transition passes measured in the q184 setup; one |E|
+    // checkpoint of three narrow columns buys the second pass back at
+    // any scale, since the caller's edge input is arbitrary upstream
+    // work).
     val e0 = Materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"),
           weight.cast("double").as("w"))
@@ -153,19 +148,12 @@ object Graphs {
     val outw = e0.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     val e = Materialize(
       e0.join(outw, Seq("src")).select(col("src"), col("dst"), (col("w") / col("outw")).as("fr")))
-    val n = v.count().toDouble
+    Materialize.release(e0)
+    val n = Materialize.rows(v).toDouble
     require(n > 0, "weightedPageRank: empty node set")
 
-    // `outdeg` doubles as the dangling test: out-WEIGHT here (0 ⇔ no
-    // positive out-edge), the share itself rides the edge relation
-    val withDeg = Materialize(
-      v.join(outw.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("outw"), lit(0.0)).as("outdeg")))
-    Materialize.release(e0)
-
-    val init = round(lit(1.0 / n), scale)
     prIterations(
-      withDeg.select(col("node"), col("outdeg"), init.as("rank")), e, iters,
+      v.select(col("node"), round(lit(1.0 / n), scale).as("rank")), e, iters,
       (inflow, dangling) =>
         round(
           lit((1.0 - damping) / n) +
@@ -217,15 +205,10 @@ object Graphs {
     val ns = sd.count().toDouble
     require(ns > 0, "personalizedPageRank: no seed is present in the node set")
 
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val withT = Materialize(
-      v.join(outdeg, Seq("node"), "left").na.fill(0L, Seq("outdeg"))
-        .join(sd.withColumn("__isSeed", lit(true)), Seq("node"), "left")
-        .withColumn("t", when(col("__isSeed"), lit(1.0 / ns)).otherwise(lit(0.0)))
-        .drop("__isSeed"))
-
+    val t = when(col("__isSeed"), lit(1.0 / ns)).otherwise(lit(0.0))
     prIterations(
-      withT.select(col("node"), col("outdeg"), col("t"), round(col("t"), scale).as("rank")),
+      v.join(sd.withColumn("__isSeed", lit(true)), Seq("node"), "left")
+        .select(col("node"), t.as("t"), round(t, scale).as("rank")),
       e, iters,
       (inflow, dangling) =>
         round(
@@ -235,22 +218,33 @@ object Graphs {
       convergeEarly)
   }
 
-  /** The synchronous rank loop shared by [[pageRank]] and
-    * [[personalizedPageRank]]: `state0` carries `node`, `outdeg`, `rank`
-    * plus any teleport columns `update` references; each round computes
-    * the dangling scalar (bounded driver state) and the inflow aggregate,
-    * applies `update(coalesced inflow, dangling)`, and re-materializes —
-    * lineage cut per round, superseded blocks released.
+  /** The synchronous rank loop shared by [[pageRank]],
+    * [[weightedPageRank]] and [[personalizedPageRank]]: `state0` carries
+    * `node`, the initial `rank` and any teleport columns `update`
+    * references; the out-degree over `e` joins it in the first state's
+    * checkpoint (static, computed once; with a share fraction `fr` on the
+    * edges it is only the dangling test). Each round applies
+    * `update(coalesced inflow, dangling)` and re-materializes — lineage
+    * cut per round, superseded blocks released.
+    *
+    * Per round, three Spark jobs: the rank state (O(V), exactly sized by
+    * its checkpoint) is broadcast into the edge join that emits the
+    * shares; ONE aggregate by node over `state ∪ shares` carries each
+    * node's own row (tagged by its old rank, `__prev`) beside its summed
+    * inflow, so the node set stays the state's and no `state ⋈ inflow`
+    * join is needed; the result is checkpointed. The dangling mass `D`
+    * is observed on that checkpoint job ([[graft.Materialize.observed]])
+    * and enters the next round as a literal.
     *
     * `convergeEarly` stops as soon as a round leaves every rank UNCHANGED
-    * on the 10^-scale grid (`max|rank' − rank| = 0` — one bounded scalar
-    * aggregate per round over the already-materialized state, the CC
-    * loop's convergence convention). Because ranks live on the grid after
-    * every round, a fixed point is EXACT — once a round is a no-op, all
-    * later rounds are too, so the early exit returns bit-identical output
-    * to running the full `iters`. Production runs set it to skip dead
-    * rounds; the cross-engine gates keep the default (fixed `iters`) so
-    * the DuckDB oracle unrolls the same round count.
+    * on the 10^-scale grid (`max|rank' − rank| = 0`, observed on the same
+    * checkpoint job — the CC loop's convergence convention). Because
+    * ranks live on the grid after every round, a fixed point is EXACT —
+    * once a round is a no-op, all later rounds are too, so the early exit
+    * returns bit-identical output to running the full `iters`. Production
+    * runs set it to skip dead rounds; the cross-engine gates keep the
+    * default (fixed `iters`) so the DuckDB oracle unrolls the same round
+    * count.
     */
   private def prIterations(
       state0: DataFrame,
@@ -258,47 +252,43 @@ object Graphs {
       iters: Int,
       update: (Column, Column) => Column,
       convergeEarly: Boolean = false): DataFrame = {
-    val carried = state0.columns.filterNot(_ == "rank").map(col).toSeq
-    var state = Materialize(state0)
+    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+    val start = state0.join(outdeg, Seq("node"), "left").na.fill(0L, Seq("outdeg"))
+    val carried = start.columns.filterNot(_ == "rank").toSeq // node first
+    val dangling = coalesce(sum(when(col("outdeg") === 0, col("rank"))), lit(0.0)).as("dangling")
+    val delta = max(abs(col("rank") - col("__prev"))).as("delta")
+    val scalars = if (convergeEarly) Seq(dangling, delta) else Seq(dangling)
+    var (state, m) = Materialize.observed(start, dangling)
     var round = 0
     var fixed = false
     while (round < iters && !fixed) {
-      // The dangling mass rides as a broadcast ONE-ROW relation instead of
-      // a per-iteration driver collect: the scalar aggregate is a
-      // broadcast subtree of the round's materialization, so the round
-      // pays no separate driver action for it. It is not a single job:
-      // under AQE the materialization runs each query stage (the scalar
-      // aggregate, the broadcast, the shuffles) as its own job.
-      val dangDf = state.where(col("outdeg") === 0)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dang"))
-
       // weighted graphs stage the per-edge share FRACTION (w / out-weight)
-      // on the edge relation once ([[weightedPageRank]]); the unweighted
-      // path keeps rank/outdeg exactly as before
-      val contrib = (if (e.columns.contains("fr"))
-        e.join(state.where(col("outdeg") > 0)
-            .select(col("node").as("src"), col("rank")), Seq("src"))
-          .withColumn("share", col("rank") * col("fr"))
-      else
-        e.join(state.where(col("outdeg") > 0).select(col("node").as("src"),
-          (col("rank") / col("outdeg")).as("share")), Seq("src")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("inflow"))
-
-      val prevRank = if (convergeEarly) Seq(col("__prev")) else Nil
-      val next = state.drop("__prev").withColumnRenamed("rank", "__prev")
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dangDf))
-        .select(carried ++ prevRank :+
-          update(coalesce(col("inflow"), lit(0.0)), col("__dang")).as("rank"): _*)
+      // on the edge relation once ([[weightedPageRank]]); unweighted
+      // shares are rank/outdeg
+      val givers = state.where(col("outdeg") > 0)
+      val shares =
+        if (e.columns.contains("fr"))
+          e.join(givers.select(col("node").as("src"), col("rank")), Seq("src"))
+            .select(col("dst").as("node"), (col("rank") * col("fr")).as("share"))
+        else
+          e.join(givers.select(col("node").as("src"), (col("rank") / col("outdeg")).as("share")),
+              Seq("src"))
+            .select(col("dst").as("node"), col("share"))
+      val next = state.select(carried.map(col) :+ col("rank").as("__prev"): _*)
+        .unionByName(shares, allowMissingColumns = true)
+        .groupBy(col("node"))
+        .agg(max(col("__prev")).as("__prev"),
+          sum(col("share")).as("inflow") +: carried.tail.map(c => max(col(c)).as(c)): _*)
+        .where(col("__prev").isNotNull)
+        .select(carried.map(col) ++ (if (convergeEarly) Seq(col("__prev")) else Nil) :+
+          update(coalesce(col("inflow"), lit(0.0)), lit(m.getAs[Double]("dangling"))).as("rank"): _*)
 
       val prev = state
-      state = Materialize(next)
-      if (convergeEarly) {
-        // grid-exact delta over the state this round materialized anyway
-        val delta = state.agg(max(abs(col("rank") - col("__prev")))).head().getDouble(0)
-        fixed = delta == 0.0
-      }
+      val (s1, m1) = Materialize.observed(next, scalars: _*)
+      state = s1
+      m = m1
+      // grid-exact: the round changed nothing, and neither would any later one
+      fixed = convergeEarly && m.getAs[Double]("delta") == 0.0
       Materialize.release(prev)
       round += 1
     }
@@ -316,8 +306,8 @@ object Graphs {
     * (small) reached set, so total work is proportional to the edges
     * incident to the closure, not rounds × |E|. Frontier and reached
     * relations are re-materialized per round (lineage cut); the loop exits
-    * early on an empty frontier (one bounded count per round, the
-    * [[graft.dedup.Dedup.nearDupClusters]] convention).
+    * early on an empty frontier (the frontier checkpoint's row count, read
+    * with no job).
     */
   def kHopMinDist(
       edges: DataFrame,
@@ -338,7 +328,7 @@ object Graphs {
     var frontier = reached.select(col("node"))
 
     var h = 1
-    var exhausted = frontier.isEmpty
+    var exhausted = Materialize.rows(reached) == 0
     var prevFresh: Option[DataFrame] = None
     while (h <= maxHops && !exhausted) {
       val expanded = e.join(frontier.select(col("node").as("src")), Seq("src"))
@@ -349,7 +339,7 @@ object Graphs {
       // the previous frontier fed `expanded`, which is now materialized
       // into `fresh` — its blocks are dead
       prevFresh.foreach(Materialize.release)
-      if (fresh.isEmpty) {
+      if (Materialize.rows(fresh) == 0) {
         exhausted = true
         Materialize.release(fresh)
         prevFresh = None
@@ -413,7 +403,7 @@ object Graphs {
         expanded.join(reached.select(col("root"), col("node")), Seq("root", "node"), "left_anti")
           .withColumn("dist", lit(h)))
       prevFresh.foreach(Materialize.release)
-      if (fresh.isEmpty) {
+      if (Materialize.rows(fresh) == 0) {
         exhausted = true
         Materialize.release(fresh)
         prevFresh = None
@@ -517,26 +507,24 @@ object Graphs {
     val levels = scala.collection.mutable.ArrayBuffer(l0)
     var reached = l0.select(col("root"), col("node"))
     var h = 1
-    var exhausted = l0.isEmpty
+    var exhausted = Materialize.rows(l0) == 0
     while (h <= maxHops && !exhausted) {
       val prev = levels.last
       val cand = e.join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("root"), col("dst").as("node"), col("sigma"))
         .join(reached, Seq("root", "node"), "left_anti")
         .groupBy(col("root"), col("node")).agg(sum(col("sigma")).as("sigma"))
-      val fresh = Materialize(cand)
-      // ONE driver action per level for both the exhaustion test and the
-      // overflow guard (round 17: the old isEmpty + max pair cost two
-      // scheduling round-trips per level in a loop whose per-level work
-      // is tiny — q195 spent half its wall in driver gaps across 71 jobs)
-      val stats = fresh.agg(count(lit(1)), max(col("sigma"))).head()
-      if (stats.getLong(0) == 0L) {
+      // the exhaustion test and the overflow guard both ride the level's
+      // checkpoint job (round 17 measured q195 spending half its wall in
+      // driver gaps between such per-level scalar jobs)
+      val (fresh, stats) = Materialize.observed(cand, max(col("sigma")).as("max_sigma"))
+      if (Materialize.rows(fresh) == 0L) {
         exhausted = true
         Materialize.release(fresh)
       } else {
         // loud overflow guard: σ must stay far from Long.Max (sum wraps
         // silently); trip at 2^62 so one more doubling cannot wrap
-        val mx = stats.getLong(1)
+        val mx = stats.getAs[Long]("max_sigma")
         require(mx > 0 && mx < (1L << 62),
           s"betweennessKSources: path counts overflow LONG at level $h (max σ = $mx) — " +
             "lower maxHops or shrink the source ball")
@@ -968,7 +956,7 @@ object Graphs {
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"), col("w"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
     val live = Materialize(e0)
-    val nEdges = live.count()
+    val nEdges = Materialize.rows(live)
     if (nEdges <= localEdges) {
       val spark = live.sparkSession
       val sorted = live.collect()
@@ -1011,7 +999,7 @@ object Graphs {
           .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"),
             col("e.cu").as("cu"), col("e.cv").as("cv"))
           .distinct())
-      if (chosen.isEmpty) {
+      if (Materialize.rows(chosen) == 0) {
         done = true
         Materialize.release(chosen)
       } else {
@@ -1060,9 +1048,9 @@ object Graphs {
     *
     * Scale shape per round: one map-side-combined degree aggregate over
     * the surviving edges + two semi-joins (edges whose BOTH endpoints
-    * survive) + one bounded count for the exit test; the edge relation is
-    * re-materialized per round (lineage cut), superseded blocks
-    * released.
+    * survive); the exit test compares the edge checkpoints' row counts
+    * (no job). The edge relation is re-materialized per round (lineage
+    * cut), superseded blocks released.
     *
     * @return (node LONG, deg LONG) — core membership with the degree
     *         inside the core
@@ -1080,7 +1068,7 @@ object Graphs {
         .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
         .distinct())
-    var eCount = e.count()
+    var eCount = Materialize.rows(e)
     var round = 0
     var stable = false
     while (round < maxRounds && !stable) {
@@ -1096,10 +1084,10 @@ object Graphs {
         e.join(keep.withColumnRenamed("node", "lo"), Seq("lo"), "left_semi")
           .join(keep.withColumnRenamed("node", "hi"), Seq("hi"), "left_semi")
           .select(col("lo"), col("hi")))
-      // bounded exit test: peeling strictly shrinks the edge set until the
-      // fixpoint, so |edges| unchanged <=> stable (one count per round —
-      // the previous round's is carried, not recomputed)
-      val nextCount = next.count()
+      // exit test: peeling strictly shrinks the edge set until the
+      // fixpoint, so |edges| unchanged <=> stable (both counts are read
+      // from the checkpoints' statistics, no job)
+      val nextCount = Materialize.rows(next)
       stable = nextCount == eCount
       eCount = nextCount
       Materialize.release(e)
@@ -1170,7 +1158,7 @@ object Graphs {
         .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
         .distinct())
     var e = eOwned
-    var eCount = e.count()
+    var eCount = Materialize.rows(e)
     var round = 0
     var stable = eCount == 0L
     while (round < maxRounds && !stable) {
@@ -1184,7 +1172,7 @@ object Graphs {
       // old readout recomputed one full extra triangle pass for it.
       // (the round's own scope frees its triangle machinery's checkpoint)
       val keep = Materialize.scope(Materialize(supportOf(e).where(col("support") >= minSup)))
-      val nextCount = keep.count()
+      val nextCount = Materialize.rows(keep)
       stable = nextCount == eCount
       eCount = nextCount
       Materialize.release(eOwned)
@@ -1216,10 +1204,16 @@ object Graphs {
     * also exits early once no distance improves (the fixpoint, reached
     * at ≤ diameter rounds on non-negative weights).
     *
-    * Scale shape per round: one join of the FRONTIER against the edge
-    * relation + one map-side-combined min aggregate + one full-outer
-    * merge into the distance state; state re-materialized per round
-    * (lineage cut), superseded blocks released.
+    * Scale shape: a round is three Spark jobs. The state (`node`,
+    * `dist`, `improved`) holds every reached node; the FRONTIER is its
+    * `improved` rows, broadcast into the edge join that emits the
+    * candidates `dist + w`. ONE aggregate by node over `state ∪
+    * candidates` (no pre-aggregation of the candidates: the shuffle's
+    * map-side combine does that) yields the old and the best candidate
+    * distance, hence the new distance and the next `improved` flag, and
+    * the result is checkpointed. The improved count that decides the
+    * exit is observed on that checkpoint job. Superseded blocks are
+    * released.
     *
     * @return (node LONG, dist LONG) — every node reachable within
     *         `maxHops` hops, seeds at 0
@@ -1240,33 +1234,31 @@ object Graphs {
           col("src") =!= col("dst") && col("w").isNotNull)
         .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
 
-    var dist = Materialize(
+    val nImproved = count(when(col("improved"), 1)).as("n_improved")
+    var (state, m) = Materialize.observed(
       seeds.select(seed.cast("long").as("node")).where(col("node").isNotNull)
-        .distinct().withColumn("dist", lit(0L)))
-    var frontier = dist
+        .distinct().select(col("node"), lit(0L).as("dist"), lit(true).as("improved")),
+      nImproved)
     var h = 1
-    var live = !frontier.isEmpty
-    while (h <= maxHops && live) {
+    while (h <= maxHops && m.getAs[Long]("n_improved") > 0) {
       val cand = e
-        .join(frontier.select(col("node").as("src"), col("dist")), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(min(col("dist") + col("w")).as("cand"))
-      val improved = Materialize(
-        cand.join(dist, Seq("node"), "left")
-          .where(col("dist").isNull || col("cand") < col("dist"))
-          .select(col("node"), col("cand").as("dist")))
-      if (improved.isEmpty) { live = false; Materialize.release(improved) }
-      else {
-        val prev = dist
-        dist = Materialize(
-          prev.join(improved.withColumnRenamed("dist", "__d"), Seq("node"), "full_outer")
-            .select(col("node"), coalesce(col("__d"), col("dist")).as("dist")))
-        if (frontier ne prev) Materialize.release(frontier)
-        Materialize.release(prev)
-        frontier = improved
-      }
+        .join(state.where(col("improved")).select(col("node").as("src"), col("dist").as("__d")),
+          Seq("src"))
+        .select(col("dst").as("node"), (col("__d") + col("w")).as("cand"))
+      val better = col("cand").isNotNull && (col("old").isNull || col("cand") < col("old"))
+      val next = state.select(col("node"), col("dist").as("old"))
+        .unionByName(cand, allowMissingColumns = true)
+        .groupBy(col("node")).agg(min(col("old")).as("old"), min(col("cand")).as("cand"))
+        .select(col("node"), when(better, col("cand")).otherwise(col("old")).as("dist"),
+          better.as("improved"))
+      val prev = state
+      val (s1, m1) = Materialize.observed(next, nImproved)
+      state = s1
+      m = m1
+      Materialize.release(prev)
       h += 1
     }
-    dist
+    state.select(col("node"), col("dist"))
   }
 
   /** Strongly connected components of the DIRECTED graph: every node of
@@ -1351,7 +1343,7 @@ object Graphs {
       Materialize.release(prev)
     }
 
-    var eCount = e.count()
+    var eCount = Materialize.rows(e)
     var outer = 0
     while (eCount > 0 && outer < maxOuterRounds) {
       if (eCount <= localEdges) {
@@ -1370,7 +1362,7 @@ object Graphs {
         val t = Materialize(
           srcs.join(dsts, Seq("node"), "left_anti") // out-edges, no in-edge
             .unionByName(dsts.join(srcs, Seq("node"), "left_anti"))) // in, no out
-        if (t.isEmpty) { trimming = false; Materialize.release(t) }
+        if (Materialize.rows(t) == 0) { trimming = false; Materialize.release(t) }
         else {
           emit(t.select(col("node"), col("node").as("scc")))
           val prevE = e
@@ -1378,7 +1370,7 @@ object Graphs {
             .join(t.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
             .join(t.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
             .select(col("src"), col("dst")))
-          eCount = e.count()
+          eCount = Materialize.rows(e)
           Materialize.release(prevE); Materialize.release(t)
         }
       }
@@ -1396,7 +1388,7 @@ object Graphs {
           val improved = Materialize(pushed.join(colors, Seq("node"))
             .where(col("cand") < col("color"))
             .select(col("node"), col("cand").as("color")))
-          if (improved.isEmpty) { moving = false; Materialize.release(improved) }
+          if (Materialize.rows(improved) == 0) { moving = false; Materialize.release(improved) }
           else {
             val prevC = colors
             colors = Materialize(prevC
@@ -1422,7 +1414,7 @@ object Graphs {
             .where(col("color") === col("__uc"))
             .select(col("node"), col("color"))
             .join(flagged.select(col("node")), Seq("node"), "left_anti"))
-          if (fresh.isEmpty) { growing = false; Materialize.release(fresh) }
+          if (Materialize.rows(fresh) == 0) { growing = false; Materialize.release(fresh) }
           else {
             val prevF = flagged
             flagged = Materialize(prevF.unionByName(fresh))
@@ -1439,7 +1431,7 @@ object Graphs {
         e = Materialize(prevE
           .join(flagged.select(col("node").as("src")), Seq("src"), "left_anti")
           .join(flagged.select(col("node").as("dst")), Seq("dst"), "left_anti"))
-        eCount = e.count()
+        eCount = Materialize.rows(e)
         Seq(prevE, nodes, colors, flagged).foreach(Materialize.release)
       }
       }

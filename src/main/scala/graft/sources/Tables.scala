@@ -94,8 +94,35 @@ object Tables {
     df
   }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    guardSchema(name, spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    guardSchema(name, spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** Parquet reader settings that change the schema inferred from a file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val inferred =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Seq[Option[String]]), StructType]()
+
+  /** The schema Spark infers for the parquet file at `path`, cached on the
+    * file's path, modification time and length (and the reader settings
+    * that shape inference); a directory of part files is keyed on its
+    * entries' latest modification time and total length. Inference runs a
+    * Spark job per call; a load of an unchanged file reuses the schema and
+    * runs none, and a rewritten file is inferred again.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
+    val key = (st.getPath.toString, files.map(_.getModificationTime).max, files.map(_.getLen).sum,
+      inferenceConfs.map(spark.conf.getOption))
+    inferred.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   /** `events.parquet` has shipped with two encodings for `ts` across driver
     * testdata regenerations:

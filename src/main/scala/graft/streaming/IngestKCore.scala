@@ -79,7 +79,7 @@ object IngestKCore {
     var x = Materialize(degEnough(minusBig(seedEndpoints, core)))
     var frontier = x
     var round = 0
-    while (!frontier.isEmpty) {
+    while (Materialize.rows(frontier) > 0) {
       round += 1
       if (round > maxRounds) throw new IllegalStateException(
         s"IngestKCore: candidate expansion exceeded $maxRounds rounds — the batch's " +
@@ -92,7 +92,7 @@ object IngestKCore {
       Materialize.release(prevFrontier)
       Materialize.release(prevX)
     }
-    if (x.isEmpty) x
+    if (Materialize.rows(x) == 0) x
     else {
       val adjX = Materialize(adjOf(post, x))
       val adjW = adjX.select(col("w").as("node")).distinct()
@@ -101,7 +101,7 @@ object IngestKCore {
           Seq("w"), "left_semi")
         .groupBy(col("x")).agg(count(lit(1)).as("sc")))
       var live = x
-      var liveCount = live.count()
+      var liveCount = Materialize.rows(live)
       var stable = false
       while (!stable) {
         val xCredit = adjX
@@ -112,7 +112,7 @@ object IngestKCore {
           .select(col("x").as("node"),
             (coalesce(col("sc"), lit(0L)) + coalesce(col("xc"), lit(0L))).as("c"))
         val next = Materialize(credit.where(col("c") >= k).select(col("node")))
-        val nextCount = next.count()
+        val nextCount = Materialize.rows(next)
         stable = nextCount == liveCount
         liveCount = nextCount
         Materialize.release(live)
@@ -135,7 +135,7 @@ object IngestKCore {
       k: Int): DataFrame = {
     var removed = Materialize(delEndpoints.where(lit(false)))
     var frontier = Materialize(interBig(core, delEndpoints))
-    while (!frontier.isEmpty) {
+    while (Materialize.rows(frontier) > 0) {
       val adjF = adjOf(post, frontier)
       val adjW = adjF.select(col("w").as("node")).distinct()
       val memberW = interBig(core, adjW)
@@ -148,7 +148,7 @@ object IngestKCore {
         .where(coalesce(col("d"), lit(0L)) < k)
         .select(col("x").as("node")))
       val (prevFrontier, prevRemoved) = (frontier, removed)
-      if (drop.isEmpty) frontier = Materialize(drop)
+      if (Materialize.rows(drop) == 0) frontier = Materialize(drop)
       else {
         removed = Materialize(removed.unionByName(drop))
         frontier = Materialize(
@@ -233,7 +233,7 @@ final class IngestKCore(
     val member = core.unionByName(promoted)
     val inCoreEndpoints = IngestKCore.interBig(member, endpoints)
     val coreNbrsOfPromoted =
-      if (promoted.isEmpty) promoted
+      if (Materialize.rows(promoted) == 0) promoted
       else {
         val adjP = Materialize(IngestKCore.adjOf(post, promoted)
           .select(col("w").as("node")).distinct())
@@ -241,7 +241,7 @@ final class IngestKCore(
       }
     val touched = Materialize(promoted.unionByName(inCoreEndpoints)
       .unionByName(coreNbrsOfPromoted).distinct())
-    if (!touched.isEmpty) {
+    if (Materialize.rows(touched) > 0) {
       val degs = IngestKCore.touchedDegs(post, member, touched)
       IvmMaintenance.rebuildTouchedBuckets(
         spark, coreTable, prev, degs, touched,
@@ -326,12 +326,12 @@ final class IngestKCoreCdc(
     val changedEndpoints = insEndpoints.unionByName(delEndpoints).distinct()
     val inCoreEndpoints = IngestKCore.interBig(member, changedEndpoints)
     def coreNbrsOf(nodes: DataFrame): DataFrame =
-      if (nodes.isEmpty) nodes
+      if (Materialize.rows(nodes) == 0) nodes
       else IngestKCore.interBig(member,
         Materialize(IngestKCore.adjOf(post, nodes).select(col("w").as("node")).distinct()))
     val touched = Materialize(promoted.unionByName(inCoreEndpoints)
       .unionByName(coreNbrsOf(promoted)).unionByName(coreNbrsOf(removed)).distinct())
-    if (!touched.isEmpty || !removed.isEmpty) {
+    if (Materialize.rows(touched) > 0 || Materialize.rows(removed) > 0) {
       // both delta-sized; materializing severs the deeply-shared
       // union/anti-join lineage (core1/member/promoted/removed all
       // reference the same scans), which Catalyst's Union constraint

@@ -76,10 +76,10 @@ final class IngestKTrussCdc(
     val deletedTruss = Materialize(
       preTruss.join(broadcast(delEdges), Seq("u", "v"), "left_semi"))
     var removedAll = deletedTruss
-    if (!deletedTruss.isEmpty) {
+    if (Materialize.rows(deletedTruss) > 0) {
       var frontier = Materialize(partners(triRows(deletedTruss, preTruss))
         .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
-      while (!frontier.isEmpty) {
+      while (Materialize.rows(frontier) > 0) {
         val live = preTruss.join(broadcast(removedAll), Seq("u", "v"), "left_anti")
         val sup = triRows(frontier, live)
           .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
@@ -87,7 +87,7 @@ final class IngestKTrussCdc(
           .where(coalesce(col("s"), lit(0L)) < minSup)
           .select(col("u"), col("v")))
         val (prevFrontier, prevRemoved) = (frontier, removedAll)
-        if (drop.isEmpty) frontier = Materialize(drop)
+        if (Materialize.rows(drop) == 0) frontier = Materialize(drop)
         else {
           val loseFrom = Materialize(partners(triRows(drop, live)))
           removedAll = Materialize(removedAll.unionByName(drop))
@@ -103,7 +103,7 @@ final class IngestKTrussCdc(
 
     // ---- promotion on (E ∖ del) ∪ ins against the shrunk truss ----
     def fullSupOk(cands: DataFrame): DataFrame =
-      if (cands.isEmpty) cands
+      if (Materialize.rows(cands) == 0) cands
       else triRows(cands, post)
         .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
         .where(col("s") >= minSup).select(col("u"), col("v"))
@@ -122,7 +122,7 @@ final class IngestKTrussCdc(
     var x = Materialize(fullSupOk(seedCand))
     var frontier2 = x
     var round = 0
-    while (!frontier2.isEmpty) {
+    while (Materialize.rows(frontier2) > 0) {
       round += 1
       if (round > maxRounds) throw new IllegalStateException(
         s"IngestKTrussCdc: candidate expansion exceeded $maxRounds rounds; " +
@@ -135,7 +135,7 @@ final class IngestKTrussCdc(
       Seq(p, cand, prevFrontier, prevX).foreach(Materialize.release)
     }
     val promoted: DataFrame =
-      if (x.isEmpty) x
+      if (Materialize.rows(x) == 0) x
       else {
         // candidate triangles ONCE, partner-membership vs the STATIC
         // intermediate truss precomputed as flags; only the live-set
@@ -153,7 +153,7 @@ final class IngestKTrussCdc(
         }
         val triX = Materialize(inT1("au", "av", "t1")(inT1("bu", "bv", "t2")(triX0)))
         var live = x
-        var liveCount = live.count()
+        var liveCount = Materialize.rows(live)
         var stable = false
         while (!stable) {
           val m1 = broadcast(live.select(col("u").as("au"), col("v").as("av"))
@@ -166,7 +166,7 @@ final class IngestKTrussCdc(
             .groupBy(col("ku").as("u"), col("kv").as("v")).agg(count(lit(1)).as("s"))
           val next = Materialize(live.join(sup.where(col("s") >= minSup),
             Seq("u", "v"), "left_semi"))
-          val nextCount = next.count()
+          val nextCount = Materialize.rows(next)
           stable = nextCount == liveCount
           liveCount = nextCount
           Materialize.release(live)
@@ -178,15 +178,15 @@ final class IngestKTrussCdc(
     // ---- touched-support recompute over the FINAL truss ----
     val finalTruss = truss1.unionByName(promoted)
     val gainedPartners =
-      if (promoted.isEmpty) promoted
+      if (Materialize.rows(promoted) == 0) promoted
       else Materialize(partners(triRows(promoted, finalTruss)))
     val lostPartners =
-      if (removedAll.isEmpty) removedAll
+      if (Materialize.rows(removedAll) == 0) removedAll
       else Materialize(partners(triRows(removedAll, preTruss))
         .join(broadcast(removedAll), Seq("u", "v"), "left_anti"))
     val touched = Materialize(promoted.unionByName(gainedPartners)
       .unionByName(lostPartners).distinct())
-    if (!touched.isEmpty || !removedAll.isEmpty) {
+    if (Materialize.rows(touched) > 0 || Materialize.rows(removedAll) > 0) {
       val supports = Materialize(triRows(touched, finalTruss)
         .groupBy(col("ku").as("lo"), col("kv").as("hi")).agg(count(lit(1)).as("support")))
       val dropIds = Materialize(removedAll.unionByName(touched).distinct()

@@ -678,7 +678,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!s183.contains("CartesianProduct"), s183)
     assert(s183.contains("ExistingRDD") || s183.contains("LocalTableScan"), s183)
     // q184: the weighted rank loop's returned state is checkpointed like
-    // q154's — no rescan, no cartesian (the dangling scalar is broadcast)
+    // q154's — no rescan, no cartesian (the dangling scalar is a literal)
     val s184 = simplePlan("q184_weighted_pagerank")
     assert(!s184.contains("Scan parquet"), s184)
     assert(!s184.contains("CartesianProduct"), s184)

@@ -88,4 +88,35 @@ class TablesSpec extends SparkSpec {
       assert(Tables.load(spark, dir, t).limit(1).count() == 1, s"table $t")
     }
   }
+
+  test("a table's inferred schema is cached: a second load runs no job, a rewritten file is inferred again") {
+    import org.apache.spark.graft.JobCount
+    val dir = tmp()
+    val file = java.nio.file.Paths.get(dir, "widgets.parquet")
+    def writeFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = s"$dir/out-${System.nanoTime()}"
+      df.coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFile(spark.range(5).toDF("a"))
+    val (first, firstJobs) = JobCount(spark.sparkContext)(Tables.load(spark, dir, "widgets"))
+    assert(first.columns.toSeq == Seq("a") && firstJobs >= 1)
+    val (again, againJobs) = JobCount(spark.sparkContext)(Tables.load(spark, dir, "widgets"))
+    assert(againJobs == 0, s"a second load of an unchanged file ran $againJobs jobs")
+    assert(again.collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+
+    writeFile(spark.range(7).select(col("id").as("a"), (col("id") * 2).as("b")))
+    val rewritten = Tables.load(spark, dir, "widgets")
+    assert(rewritten.columns.toSeq == Seq("a", "b"))
+    assert(rewritten.where(col("a") === 6L).select("b").as[Long].head() == 12L)
+
+    // a directory of part files: rewriting it is seen too
+    spark.range(3).toDF("x").write.parquet(s"$dir/gadgets.parquet")
+    assert(Tables.load(spark, dir, "gadgets").columns.toSeq == Seq("x"))
+    assert(JobCount(spark.sparkContext)(Tables.load(spark, dir, "gadgets"))._2 == 0)
+    spark.range(3).select(col("id").as("x"), lit("y").as("y"))
+      .write.mode("overwrite").parquet(s"$dir/gadgets.parquet")
+    assert(Tables.load(spark, dir, "gadgets").columns.toSeq == Seq("x", "y"))
+  }
 }
